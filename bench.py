@@ -48,28 +48,32 @@ _REGRESS_CAP = 60  # at most this many regression retimes per run
 _TAIL_K = 12  # slowest-K unconditional retimes
 
 
-def _load_prior_archive(repo_dir: str) -> dict:
-    rounds = sorted(
-        int(m.group(1))
+def _load_prior_archive(repo_dir: str, cpus: int | None = None) -> dict:
+    """The newest BENCH_FULL_r{N}[_c{cores}].json archive; with ``cpus``,
+    the newest whose recorded ``cpus`` matches it (an archive that records
+    none never matches), so a run is only ever compared like-for-like.
+    Unreadable archives are skipped; empty dict when nothing matches."""
+    archives = sorted(
+        (int(m.group(1)), f)
         for f in os.listdir(repo_dir)
-        if (m := re.match(r"BENCH_FULL_r(\d+)\.json$", f))
+        if (m := re.match(r"BENCH_FULL_r(\d+)(?:_c\d+)?\.json$", f))
     )
-    if not rounds:
-        return {}
-    try:
-        with open(
-            os.path.join(repo_dir, f"BENCH_FULL_r{rounds[-1]:02d}.json")
-        ) as fh:
-            return json.load(fh)
-    except Exception:  # pragma: no cover - archive is best-effort
-        return {}
+    for _, f in reversed(archives):
+        try:
+            with open(os.path.join(repo_dir, f)) as fh:
+                data = json.load(fh)
+        except Exception:  # pragma: no cover - archive is best-effort
+            continue
+        if cpus is None or data.get("cpus") == cpus:
+            return data
+    return {}
 
 
-def load_prior_adjusted(repo_dir: str) -> dict[str, float]:
-    """Per-query baseline from the newest BENCH_FULL_r{N}.json archive —
-    its steal_adjusted axis when present, raw queries otherwise. Empty
-    dict when no archive exists or it cannot be read."""
-    pdata = _load_prior_archive(repo_dir)
+def load_prior_adjusted(repo_dir: str, cpus: int | None = None) -> dict[str, float]:
+    """Per-query baseline from the newest matching archive (see
+    _load_prior_archive) — its steal_adjusted axis when present, raw
+    queries otherwise. Empty dict when no archive matches."""
+    pdata = _load_prior_archive(repo_dir, cpus)
     if not pdata:
         return {}
     return pdata.get("steal_adjusted", {}).get("queries") or pdata.get(
@@ -77,13 +81,13 @@ def load_prior_adjusted(repo_dir: str) -> dict[str, float]:
     )
 
 
-def load_prior_control_base(repo_dir: str) -> float | None:
-    """The newest archive's control base. A run whose own min-of-3
+def load_prior_control_base(repo_dir: str, cpus: int | None = None) -> float | None:
+    """The newest matching archive's control base. A run whose own min-of-3
     control readings are steal-inflated would otherwise raise the
     sentinel threshold and blind itself (observed: base 0.96 s on a
     stolen box vs 0.25-0.38 s quiet) — flooring against the best KNOWN
     uncontended cost keeps the trigger honest."""
-    pdata = _load_prior_archive(repo_dir)
+    pdata = _load_prior_archive(repo_dir, cpus)
     base = pdata.get("steal_adjusted", {}).get("control_base_sec")
     return float(base) if isinstance(base, (int, float)) and base > 0 else None
 
@@ -273,7 +277,7 @@ def main() -> None:
         min(run_control(spark, sf_dir) for _ in range(3)), 4
     )
     prior_base = load_prior_control_base(
-        os.path.dirname(os.path.abspath(__file__))
+        os.path.dirname(os.path.abspath(__file__)), cpus
     )
     control_base = (
         min(measured_base, prior_base) if prior_base else measured_base
@@ -359,7 +363,7 @@ def main() -> None:
     # axis converges to warm-min behavior exactly where cross-round
     # comparison needs it. All measurements land in steal_adjusted for
     # audit.
-    prior = load_prior_adjusted(os.path.dirname(os.path.abspath(__file__)))
+    prior = load_prior_adjusted(os.path.dirname(os.path.abspath(__file__)), cpus)
     regress = pick_regressed(
         {n: t for n, t in adjusted.items() if t >= 0},
         prior,

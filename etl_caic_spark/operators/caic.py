@@ -4,7 +4,8 @@ decode → type filter (R6) → non-empty guards (R7) → last-write-wins
 build-side dedup (R3) → broadcast inner join (R8) → worst-severity
 min-over-ordinal (R9) → label/color map lookups (R10) → styled projection
 with nested metadata (R11, R12) → conditional positional explode of Multi*
-geometries (R13) → union with the passthrough branch (R14).
+geometries with passthrough of single geometries (R13, R14), one
+posexplode over a per-row parts array.
 
 Reference anchors are cited per step; deviations are documented inline
 (unknown ratings rank as noRating — SURVEY.md §2.B.2).
@@ -155,54 +156,50 @@ MULTI_COORDS = {
 
 def explode_multi_geometries(features: DataFrame) -> DataFrame:
     """R13 + R14 (task.ts:171-186): Multi* geometries become one feature per
-    part with `id = id + '-' + i` and the Multi prefix stripped; single
-    geometries pass through; branches unioned.
+    part with `id = id + '-' + i` and the Multi prefix stripped; every other
+    geometry passes through unchanged (a null geometry_json included).
 
-    Coordinates are parsed from geometry_json at the depth implied by
-    geometry_type (SURVEY.md §1.4) — one branch per GeoJSON Multi kind,
-    all three sharing the same template. Each branch's filter pushes into
-    the scan, so a corpus with only MultiPolygons never materializes the
-    other branches' parses."""
-    passthrough = features.filter(
-        ~F.col("geometry_type").isin(list(MULTI_COORDS))
-    )
-
-    branches = []
+    One pass, one posexplode: each row carries its parts as one
+    array<string> — `[geometry_json]` for a non-Multi row, the per-part
+    GeoJSON for a Multi* row, its coordinates parsed at the depth its
+    geometry_type implies (SURVEY.md §1.4). A Multi* row whose coordinates
+    are empty or unparsable has no parts and yields no row; a row with a
+    null geometry_type matches no case and is dropped. Rows come out in
+    input order, parts in coordinate order; consumers key by id or hash
+    order-insensitively, so nothing depends on row order."""
+    gtype = F.col("geometry_type")
+    is_multi = gtype.isin(list(MULTI_COORDS))
+    parts = F.when(~is_multi, F.array("geometry_json"))
+    part_type = F.when(~is_multi, gtype)
     for kind, coords_schema in MULTI_COORDS.items():
-        single_kind = kind.replace("Multi", "")  # task.ts:179
-        parsed = features.filter(F.col("geometry_type") == kind).withColumn(
-            "_parts",
-            F.from_json(
-                F.col("geometry_json"),
-                f"struct<type:string,coordinates:{coords_schema}>",
-            ).getField("coordinates"),
+        single_kind = F.lit(kind.replace("Multi", ""))  # task.ts:179
+        coords = F.from_json(
+            "geometry_json", f"struct<type:string,coordinates:{coords_schema}>"
+        ).getField("coordinates")
+        parts = parts.when(
+            gtype == kind,
+            F.transform(
+                coords,
+                lambda c: F.to_json(
+                    F.struct(single_kind.alias("type"), c.alias("coordinates"))
+                ),
+            ),
         )
-        branches.append(
-            parsed.select(
-                "*", F.posexplode("_parts").alias("_part_idx", "_part")
-            ).select(
-                F.concat(F.col("id"), F.lit("-"), F.col("_part_idx")).alias("id"),
-                "callsign",
-                "fill",
-                "fill_opacity",
-                "stroke",
-                "stroke_opacity",
-                "remarks",
-                "metadata",
-                F.lit(single_kind).alias("geometry_type"),
-                F.to_json(
-                    F.struct(
-                        F.lit(single_kind).alias("type"),
-                        F.col("_part").alias("coordinates"),
-                    )
-                ).alias("geometry_json"),
-            )
-        )
+        part_type = part_type.when(gtype == kind, single_kind)
 
-    exploded = branches[0]
-    for b in branches[1:]:
-        exploded = exploded.unionByName(b)
-    return exploded.unionByName(passthrough.select(*exploded.columns))
+    exploded = features.select(
+        "*", F.posexplode(parts).alias("_part_idx", "_part")
+    )
+    replaced = {
+        "id": F.when(
+            is_multi, F.concat(F.col("id"), F.lit("-"), F.col("_part_idx"))
+        ).otherwise(F.col("id")),
+        "geometry_type": part_type,
+        "geometry_json": F.col("_part"),
+    }
+    return exploded.select(
+        *[replaced.get(c, F.col(c)).alias(c) for c in features.columns]
+    )
 
 
 def caic_pipeline(areas: DataFrame, forecasts: DataFrame) -> DataFrame:

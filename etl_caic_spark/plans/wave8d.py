@@ -403,7 +403,8 @@ def eval_chrf_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("hc").cast("bigint").alias("h"),
     )
     reftot = r.groupBy("n").agg(F.sum("rc").cast("bigint").alias("r"))
-    folded = clip.join(reftot, "n")
+    # left: an order no reference reaches keeps its hypothesis total
+    folded = clip.join(reftot, "n", "left")
     # pivot the 2-row (n, m, h, r) fold to one row WITHOUT filtering the
     # subtree twice (two filters = two executions of the whole pipeline)
     pick = lambda n, c: F.max(F.when(F.col("n") == n, F.col(c)))  # noqa: E731

@@ -10,7 +10,8 @@ endpoint. The engine's equivalents:
   a *bounded* styled-feature DataFrame into one GeoJSON FeatureCollection
   dict and hands it to a transport callable. Bounded by construction: the
   reference's payload is O(10²) features; never call this on a fact table
-  (guarded by a row limit).
+  (guarded by a row limit). Rows are collected as Arrow batches
+  (toArrow), not as pickled Row objects.
 - foreach_batch_submit: the streaming form — foreachBatch(submit) for
   micro-batch pushes (Trigger.AvailableNow replays = the reference's
   scheduled re-runs).
@@ -36,15 +37,16 @@ def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
 
 def to_feature_collection(df: DataFrame, max_rows: int = 100_000) -> dict:
     """Styled-feature rows → one GeoJSON FeatureCollection dict (driver-side;
-    guarded against unbounded collects)."""
-    rows = df.limit(max_rows + 1).collect()
+    guarded against unbounded collects). Rows arrive as Arrow record
+    batches and become plain dicts in column order: struct cells as dicts,
+    arrays as lists, nulls as None."""
+    rows = df.limit(max_rows + 1).toArrow().to_pylist()
     if len(rows) > max_rows:
         raise ValueError(
             f"feature collection exceeds {max_rows} rows; use write_parquet"
         )
     features = []
-    for r in rows:
-        d = r.asDict(recursive=True)
+    for d in rows:
         geometry = json.loads(d.pop("geometry_json"))
         d.pop("geometry_type", None)
         fid = d.pop("id")

@@ -76,3 +76,25 @@ def test_load_prior_control_base(tmp_path):
     # newest archive without the block -> None (no stale carryover)
     (tmp_path / "BENCH_FULL_r08.json").write_text(json.dumps({"queries": {}}))
     assert bench.load_prior_control_base(str(tmp_path)) is None
+
+
+def test_load_prior_matches_cpus_like_for_like(tmp_path):
+    def archive(name, cpus, q):
+        body = {"queries": {"q": q}, "steal_adjusted": {"queries": {"q": q}}}
+        if cpus is not None:
+            body["cpus"] = cpus
+        (tmp_path / name).write_text(json.dumps(body))
+
+    archive("BENCH_FULL_r15.json", None, 1.0)
+    archive("BENCH_FULL_r16.json", 32, 2.0)
+    archive("BENCH_FULL_r16_c8.json", 8, 3.0)
+    archive("BENCH_FULL_r16_draw1.json", 4, 9.0)  # draws are never a prior
+    # newest archive recorded at the run's own core count
+    assert bench.load_prior_adjusted(str(tmp_path), cpus=32) == {"q": 2.0}
+    assert bench.load_prior_adjusted(str(tmp_path), cpus=8) == {"q": 3.0}
+    # no archive at this core count (and none that records no cpus) -> none
+    assert bench.load_prior_adjusted(str(tmp_path), cpus=4) == {}
+    assert bench.load_prior_control_base(str(tmp_path), cpus=4) is None
+    archive("BENCH_FULL_r17.json", 32, 5.0)
+    assert bench.load_prior_adjusted(str(tmp_path), cpus=32) == {"q": 5.0}
+    assert bench.load_prior_adjusted(str(tmp_path), cpus=8) == {"q": 3.0}

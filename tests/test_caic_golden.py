@@ -7,10 +7,11 @@ Multi explode with id suffixes, remarks coalesce — plus the sink shape."""
 from __future__ import annotations
 
 import json
+import re
 
 import pytest
 
-from etl_caic_spark.operators.caic import caic_pipeline
+from etl_caic_spark.operators.caic import caic_pipeline, explode_multi_geometries
 from etl_caic_spark.schemas import AREAS_SCHEMA, FORECASTS_SCHEMA
 from etl_caic_spark.sources.caic_fixtures import generate_areas, generate_forecasts
 from etl_caic_spark.sources.sinks import submit_feature_collection
@@ -269,3 +270,72 @@ def test_submit_sink_shape(spark):
     # metadata is re-nested to the reference's properties.metadata object.
     meta = feats["caic-A1"]["properties"]["metadata"]
     assert isinstance(meta, dict) and meta["ratingAbove"] == "high"
+
+
+def _explode(spark, geoms):
+    """explode_multi_geometries over bare feature rows (id, type, json)."""
+    rows = [
+        (fid, "Low", "#4db748", 0.5, "#4db748", 0.75, "r", "{}", gtype, gjson)
+        for fid, gtype, gjson in geoms
+    ]
+    schema = (
+        "id string, callsign string, fill string, fill_opacity double, "
+        "stroke string, stroke_opacity double, remarks string, "
+        "metadata string, geometry_type string, geometry_json string"
+    )
+    out = explode_multi_geometries(spark.createDataFrame(rows, schema))
+    return {r["id"]: r.asDict() for r in out.collect()}
+
+
+@pytest.fixture(scope="module")
+def edge(spark):
+    return _explode(
+        spark,
+        [
+            ("empty", "MultiPolygon", '{"type":"MultiPolygon","coordinates":[]}'),
+            ("bad", "MultiLineString", "{not json"),
+            ("untyped", None, json.dumps(POLY1)),
+            ("nojson", "Polygon", None),
+            ("coll", "GeometryCollection", '{"type":"GeometryCollection"}'),
+            ("pt", "MultiPoint", json.dumps(MPOINT)),
+        ],
+    )
+
+
+def test_explode_empty_multi_yields_no_rows(edge):
+    assert not [i for i in edge if i.startswith("empty")]
+
+
+def test_explode_unparsable_multi_yields_no_rows(edge):
+    assert not [i for i in edge if i.startswith("bad")]
+
+
+def test_explode_drops_null_geometry_type(edge):
+    assert "untyped" not in edge
+
+
+def test_explode_passes_null_geometry_json_through(edge):
+    assert edge["nojson"]["geometry_type"] == "Polygon"
+    assert edge["nojson"]["geometry_json"] is None
+
+
+def test_explode_passes_unknown_kind_through(edge):
+    assert edge["coll"]["geometry_type"] == "GeometryCollection"
+    assert edge["coll"]["geometry_json"] == '{"type":"GeometryCollection"}'
+    # the Multi* row beside them still explodes, at byte-exact part JSON
+    assert {i for i in edge if i.startswith("pt")} == {"pt-0", "pt-1", "pt-2"}
+    assert edge["pt-1"]["geometry_type"] == "Point"
+    assert edge["pt-1"]["geometry_json"] == '{"type":"Point","coordinates":[3.5,4.5]}'
+
+
+def test_pipeline_plan_single_pass(spark):
+    """One dedup shuffle, one broadcast, no per-kind Union branches: a
+    union form re-plans the dedup -> broadcast subtree once per branch."""
+    out = caic_pipeline(_areas(spark), _forecasts(spark))
+    out.collect()  # run it, so the plan read is AQE's final plan
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert "Union" not in final
+    assert final.count("BroadcastExchange") == 1
+    assert len(re.findall(r"- Exchange ", final)) <= 1

@@ -84,6 +84,31 @@ def test_chrf_identity_algebra(spark, sf_dir):
     assert r["chrf2_3_micro"] <= r["chrf2_2_micro"]
 
 
+def test_chrf_keeps_order_missing_from_every_reference(spark, tmp_path):
+    """References too short for a 3-gram: the 3-gram order still reports
+    its hypothesis total (ref total and score null), as the oracle does."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({"doc_id": pa.array([0, 1, 2, 3], pa.int64()),
+                  "text": ["ab", "abc", "xy", "xyz"]}),
+        tmp_path / "documents.parquet",
+    )
+    spec = SPECS["eval_chrf_corpus"]
+    got = spec.fn(spark, str(tmp_path)).collect()[0].asDict()
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+    rel = con.sql(spec.oracle)
+    want = dict(zip(rel.columns, rel.fetchone()))
+    con.close()
+    assert got == want
+    assert got["hyp3"] == 2 and got["match3"] == 0
+    assert got["ref3"] is None and got["chrf2_3_micro"] is None
+    assert (got["match2"], got["hyp2"], got["ref2"]) == (2, 4, 2)
+
+
 def test_skyline_is_exactly_the_nondominated_set(spark, sf_dir):
     from etl_caic_spark.sources import load_table
 

@@ -4,7 +4,8 @@ SHORT JSON line {"metric", "value", "unit", "queries", "sf", ...} as the
 final stdout line. "queries" holds only the slowest 10 (the full ~125-query
 map made the line several KB and the round driver captures a bounded output
 tail — round 1's BENCH parsed as null); the complete per-query map is
-written to BENCH_FULL.json next to this script.
+written to BENCH_FULL.json next to this script. Unset, SPARK_GRAFT_CPUS
+defaults to the host's cores (session.default_cpus).
 
 Each query is forced end-to-end with the noop sink (df.write.format("noop"))
 so projection/aggregation work is not optimized away by a count().
@@ -30,7 +31,7 @@ import sys
 import time
 
 from etl_caic_spark.registry import all_specs
-from etl_caic_spark.session import get_spark
+from etl_caic_spark.session import default_cpus, get_spark
 
 
 def run_once(spark, spec, sf_dir: str) -> float:
@@ -174,7 +175,7 @@ def main() -> None:
     if "--only" in argv:
         only_arg = set(argv[argv.index("--only") + 1].split(","))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
     spark = get_spark(app_name="etl-caic-spark-bench", cpus=cpus)

@@ -3,10 +3,10 @@ end-to-end composition (after caic_pipeline and
 corpus_curation_pipeline): sessionize → ordered funnel → last-touch
 revenue attribution, oracled END-TO-END as one chained SQL twin.
 
-Everything is exact: session boundaries are integer-second gap
-comparisons, funnel stages are timestamp-ordered min() chains, revenue
-is integer cents, and the per-session "entry channel" is picked by a
-TOTAL (ts, event_id) order.
+Everything is exact: session boundaries compare gaps in fractional
+epoch seconds computed as DuckDB's epoch(ts) does, funnel stages are
+timestamp-ordered min() chains, revenue is integer cents, and the
+per-session "entry channel" is picked by a TOTAL (ts, event_id) order.
 """
 
 from __future__ import annotations
@@ -18,6 +18,12 @@ from etl_caic_spark.registry import register
 from etl_caic_spark.sources import load_table
 
 _GAP_S = 1800  # 30-minute session gap
+
+
+def _epoch_s(ts):
+    """Fractional epoch seconds, double(micros) / 1e6 — DuckDB's epoch(ts),
+    so both engines compare bit-identical gaps."""
+    return F.unix_micros(ts) / 1e6
 
 
 @register(
@@ -93,7 +99,7 @@ _GAP_S = 1800  # 30-minute session gap
 )
 def clickstream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Clickstream flagship: (1) gap-sessionize every user's event
-    stream (30-min inactivity boundary, integer-second epoch compare,
+    stream (30-min inactivity boundary, fractional-second epoch compare,
     (ts, event_id) total order); (2) run the ORDERED funnel
     view → click-after-view → purchase-after-click inside each session
     as a chain of conditional mins — each stage's timestamp gates the
@@ -117,8 +123,7 @@ def clickstream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             F.lag("ts").over(wo).isNull()
             | (
-                F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(wo))
-                > _GAP_S
+                _epoch_s(F.col("ts")) - _epoch_s(F.lag("ts").over(wo)) > _GAP_S
             ),
             1,
         )

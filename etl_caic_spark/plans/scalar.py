@@ -514,9 +514,9 @@ def agg_least_ordinal(spark: SparkSession, sf_dir: str) -> DataFrame:
         sev_alp.alias("sev_alp"),
     )
     worst_rank = F.least(
-        severity_rank(F.col("sev_btl")),
-        severity_rank(F.col("sev_tln")),
-        severity_rank(F.col("sev_alp")),
+        severity_rank("sev_btl"),
+        severity_rank("sev_tln"),
+        severity_rank("sev_alp"),
     )
     sev_array = F.array(*[F.lit(s) for s in SEVERITY_ORDER])
     return d.select(

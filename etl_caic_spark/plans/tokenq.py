@@ -161,7 +161,7 @@ def scan_rest_paginated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cursor-paginated REST ingestion replayed through the injectable
     transport (sources/rest.py fetch_json_paginated): a deterministic
     fake API serves 120 items in 25-item pages, each page carrying the
-    next-page cursor; the loader follows cursors until null, unioning
+    next-page cursor; the loader follows cursors until null, concatenating
     pages into one DataFrame under the declared fail-fast schema. The
     oracle states the full collection closed-form — the hash match
     proves no page was dropped, duplicated, or reordered across the

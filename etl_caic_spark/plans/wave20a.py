@@ -44,7 +44,7 @@ from etl_caic_spark.operators import dedup as D
 from etl_caic_spark.operators import similarity as S
 from etl_caic_spark.registry import register
 from etl_caic_spark.sources import load_table
-from etl_caic_spark.util import widen_narrow_scan
+from etl_caic_spark.util import submit_inheriting, widen_narrow_scan
 
 # --------------------------------------------------------------------------
 # dedup_semdedup_prune
@@ -743,12 +743,14 @@ def dedup_ensemble_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2-thread pool overlaps the two checkpoint jobs, and the second
     # job's tasks back-fill the first's stragglers (measured: the two
     # builds 2.7 -> 1.5 s warm, same pair sets; checkpoint
-    # materialization is order-independent).
+    # materialization is order-independent). submit_inheriting runs each
+    # leg under this thread's job group and description.
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fmh = pool.submit(
-            D.minhash_lsh_pairs_md5, corpus, "doc_id", "text", 16, 8, 3, 0.5
+        fmh = submit_inheriting(
+            pool, spark, D.minhash_lsh_pairs_md5,
+            corpus, "doc_id", "text", 16, 8, 3, 0.5,
         )
         # block-combination keys (60-bit fp, 6x10-bit blocks, C(6,3)=20
         # block-triple tables, 2^30 key space): single-block candidate
@@ -756,8 +758,8 @@ def dedup_ensemble_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 8-bit-block pin went quadratic at the 30x probe (100 s) and
         # even 4x15-bit blocks left a super-linear 100x term; triple
         # keys are the published scale shape (simhash_pairs_md5_combo)
-        fsh = pool.submit(
-            D.simhash_pairs_md5_combo, corpus, "doc_id", "text", 3
+        fsh = submit_inheriting(
+            pool, spark, D.simhash_pairs_md5_combo, corpus, "doc_id", "text", 3
         )
         mh = fmh.result()
         sh = fsh.result()

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from etl_caic_spark.registry import register
 from etl_caic_spark.sources import load_table
-from etl_caic_spark.util import widen_narrow_scan
+from etl_caic_spark.util import submit_inheriting, widen_narrow_scan
 
 # --------------------------------------------------------------------------
 # quality_ensemble_gate
@@ -361,10 +361,11 @@ def eval_semdedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pipeline's checkpoints + the gated-CC probe on the LSH side, the
     # assignment checkpoint on the IVF side) and are fully independent —
     # a 2-thread pool overlaps them; materialization order cannot
-    # change either leg's rows.
+    # change either leg's rows. submit_inheriting runs each leg under
+    # this thread's job group and description.
     with ThreadPoolExecutor(max_workers=2) as pool:
-        flsh = pool.submit(dedup_semantic_embedding, spark, sf_dir)
-        fivf = pool.submit(dedup_semdedup_prune, spark, sf_dir)
+        flsh = submit_inheriting(pool, spark, dedup_semantic_embedding, spark, sf_dir)
+        fivf = submit_inheriting(pool, spark, dedup_semdedup_prune, spark, sf_dir)
         lsh = flsh.result().select(
             "vec_id", F.col("is_kept").alias("kept_lsh")
         )

@@ -5,7 +5,10 @@ shuffle partitions sized for the scale factor, UTC session timezone (so the
 DuckDB oracle's naive-UTC timestamps agree), Arrow for pandas interchange.
 
 On a real cluster the same builder is used with ``master`` left to the
-submitter; locally we default to ``local[$SPARK_GRAFT_CPUS]``.
+submitter; locally we default to ``local[$SPARK_GRAFT_CPUS]``. Unset, the
+session fits the host it runs on: the cores in the process's affinity
+mask and half of the machine's memory (``default_cpus`` /
+``default_driver_mem``).
 """
 
 from __future__ import annotations
@@ -15,13 +18,29 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """$SPARK_GRAFT_CPUS, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def default_driver_mem() -> str:
+    """$SPARK_GRAFT_DRIVER_MEM, else half of MemTotal: in local mode one
+    JVM heap is driver and executors, and the other half stays for the
+    Python workers, the page cache and the OS."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(total // 2**21, 1024)}m"
+
+
 def get_spark(
     app_name: str = "etl-caic-spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+        cpus = default_cpus()
     if shuffle_partitions is None:
         # local mode: ~cores, not the 200 default (right-sized for test SFs;
         # at 100 TB this is instead set to ~2-3x total cluster cores and AQE
@@ -50,10 +69,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        # Single-JVM local mode: driver heap IS executor heap. 16g keeps the
-        # 167-query bench run out of GC pressure as checkpoint/shuffle blocks
-        # from successive queries await cleanup (the box has 128 GiB).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # Single-JVM local mode: driver heap IS executor heap, sized from
+        # the host so the bench run stays out of GC pressure as
+        # checkpoint/shuffle blocks from successive queries await cleanup.
+        .config("spark.driver.memory", default_driver_mem())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

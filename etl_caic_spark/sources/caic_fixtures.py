@@ -22,6 +22,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_caic_spark.schemas import AREAS_SCHEMA, FORECASTS_SCHEMA
+from etl_caic_spark.sources.rest import decode_records, records_to_arrow
 
 RATINGS = ["extreme", "high", "considerable", "moderate", "low", "noRating"]
 FORECASTERS = ["akimbo", "bluebird", "cornice", "divot"]
@@ -83,8 +84,15 @@ def area_rows(n: int = 60, seed: int = 42) -> list[tuple]:
     return rows
 
 
+def _records(rows: list[tuple], schema) -> list[dict]:
+    """Fixture rows as the JSON records a REST snapshot would carry."""
+    return [dict(zip(schema.names, r)) for r in rows]
+
+
 def generate_areas(spark: SparkSession, n: int = 60, seed: int = 42) -> DataFrame:
-    return spark.createDataFrame(area_rows(n, seed), AREAS_SCHEMA)
+    return decode_records(
+        spark, _records(area_rows(n, seed), AREAS_SCHEMA), AREAS_SCHEMA
+    )
 
 
 def forecast_rows(
@@ -144,8 +152,10 @@ def forecast_rows(
 def generate_forecasts(
     spark: SparkSession, n_areas: int = 60, per_area: float = 2.0, seed: int = 43
 ) -> DataFrame:
-    return spark.createDataFrame(
-        forecast_rows(n_areas, per_area, seed), FORECASTS_SCHEMA
+    return decode_records(
+        spark,
+        _records(forecast_rows(n_areas, per_area, seed), FORECASTS_SCHEMA),
+        FORECASTS_SCHEMA,
     )
 
 
@@ -169,7 +179,6 @@ def ensure_caic_fixture_parquet() -> tuple[str, str]:
     what upgrades caic_pipeline from rows-only to a full hash-matched
     driver check. Idempotent; atomic via tmp+rename so a concurrent oracle
     run never sees a half-written file."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     areas_path, forecasts_path = caic_fixture_paths()
@@ -178,36 +187,11 @@ def ensure_caic_fixture_parquet() -> tuple[str, str]:
         return areas_path, forecasts_path
     os.makedirs(base, exist_ok=True)
 
-    a_cols = list(zip(*area_rows()))
-    areas = pa.table(
-        {
-            "area_id": pa.array(a_cols[0], pa.string()),
-            "_pos": pa.array(a_cols[1], pa.int32()),
-            "geometry_type": pa.array(a_cols[2], pa.string()),
-            "geometry_json": pa.array(a_cols[3], pa.string()),
-            "properties_json": pa.array(a_cols[4], pa.string()),
-        }
-    )
-    f_cols = list(zip(*forecast_rows()))
-    summary_t = pa.list_(
-        pa.struct([("date", pa.string()), ("content", pa.string())])
-    )
-    rating_t = pa.list_(
-        pa.struct([("alp", pa.string()), ("tln", pa.string()), ("btl", pa.string())])
-    )
-    forecasts = pa.table(
-        {
-            "product_id": pa.array(f_cols[0], pa.string()),
-            "type": pa.array(f_cols[1], pa.string()),
-            "area_id": pa.array(f_cols[2], pa.string()),
-            "public_name": pa.array(f_cols[3], pa.string()),
-            "forecaster": pa.array(f_cols[4], pa.string()),
-            "issue_date_time": pa.array(f_cols[5], pa.string()),
-            "expiry_date_time": pa.array(f_cols[6], pa.string()),
-            "is_translated": pa.array(f_cols[7], pa.bool_()),
-            "summary_days": pa.array(f_cols[8], summary_t),
-            "rating_days": pa.array(f_cols[9], rating_t),
-        }
+    # The same Arrow decode (and so the same to_arrow_schema types) as the
+    # REST source and generate_areas / generate_forecasts.
+    areas = records_to_arrow(_records(area_rows(), AREAS_SCHEMA), AREAS_SCHEMA)
+    forecasts = records_to_arrow(
+        _records(forecast_rows(), FORECASTS_SCHEMA), FORECASTS_SCHEMA
     )
     for tbl, path in ((areas, areas_path), (forecasts, forecasts_path)):
         tmp = path + f".tmp{os.getpid()}"

@@ -39,6 +39,24 @@ def widen_narrow_scan(df: DataFrame, per_core: int = 1) -> DataFrame:
         return df
     return df.repartition(target)
 
+
+def submit_inheriting(pool, spark, fn, *args):
+    """pool.submit(fn, *args), with fn run under the calling thread's Spark
+    local properties (job group, job description, scheduler pool). PySpark
+    pins each Python thread to its own JVM thread, so a pool thread starts
+    without them, and its jobs would fall outside the caller's job group:
+    unattributed in a profile, out of reach of cancelJobGroup. The
+    properties are copied when this is called."""
+    jsc = spark.sparkContext._jsc.sc()
+    props = jsc.getLocalProperties().clone()
+
+    def leg():
+        jsc.setLocalProperties(props)
+        return fn(*args)
+
+    return pool.submit(leg)
+
+
 def strip_plan_stats(df: DataFrame) -> DataFrame:
     """Re-root a (checkpointed) DataFrame on a fresh LogicalRDD WITHOUT
     the origin plan's Catalyst statistics — the fix for the

@@ -18,7 +18,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="etl-caic-spark-tests", cpus=8)
+    s = get_spark(app_name="etl-caic-spark-tests")
     yield s
     s.stop()
 

@@ -257,3 +257,21 @@ def test_embeddings_vec_id_unique():
     t = pq.read_table(os.path.join(SF_DIR, "embeddings.parquet"), columns=["vec_id"])
     ids = t.column("vec_id").to_pylist()
     assert len(ids) == len(set(ids))
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_embeddings_are_full_64_dim(sf):
+    """The other half of pq_shortlist_frames' d = 0 precondition: a row
+    whose embedding is null or empty posexplodes to no d = 0 coordinate
+    and would silently drop out of the anchor ids. Every row carries a
+    non-null 64-dim embedding."""
+    import pyarrow.compute as pc
+
+    path = os.path.join(os.path.dirname(SF_DIR), sf, "embeddings.parquet")
+    if not os.path.exists(path):
+        pytest.skip(f"no {sf} fixture")
+    emb = pq.read_table(path, columns=["embedding"]).column("embedding")
+    assert emb.null_count == 0
+    lengths = pc.list_value_length(emb)
+    assert pc.min(lengths).as_py() == pc.max(lengths).as_py() == 64
+    assert pc.list_flatten(emb).null_count == 0

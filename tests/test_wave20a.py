@@ -157,3 +157,54 @@ def test_ensemble_agreement_laws(spark, sf_dir):
     assert any(r["n_methods"] < 4 for r in rows)
     c = Counter(r["n_methods"] for r in rows)
     assert c[4] >= 2 * len(planted)
+
+
+def _jobs_by_group(spark, group, build):
+    """Run build() under job group `group`; return (jobs in the group,
+    jobs it started outside any group)."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    spark.range(1).count()  # marker: the newest ungrouped job so far
+    bus.waitUntilEmpty()
+    marker = max(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "leg inheritance")
+    try:
+        build()
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty()
+    ungrouped = [j for j in tracker.getJobIdsForGroup(None) if j > marker]
+    return tracker.getJobIdsForGroup(group), ungrouped
+
+
+def test_submit_inheriting_runs_leg_in_callers_group(spark):
+    from concurrent.futures import ThreadPoolExecutor
+
+    from etl_caic_spark.util import submit_inheriting
+
+    def one_leg(submit):
+        def build():
+            with ThreadPoolExecutor(max_workers=1) as pool:
+                submit(pool, lambda: spark.range(100).count()).result()
+
+        return build
+
+    grouped, ungrouped = _jobs_by_group(
+        spark, "t-inherit", one_leg(lambda p, fn: submit_inheriting(p, spark, fn))
+    )
+    assert grouped and not ungrouped
+    # a plain submit starts the leg without the caller's properties
+    grouped, ungrouped = _jobs_by_group(
+        spark, "t-plain", one_leg(lambda p, fn: p.submit(fn))
+    )
+    assert ungrouped and not grouped
+
+
+def test_ensemble_legs_land_in_callers_group(spark, sf_dir):
+    """The minhash and simhash legs' eager checkpoint jobs run on pool
+    threads; every one of them is attributed to the caller's job group."""
+    grouped, ungrouped = _jobs_by_group(
+        spark, "t-ensemble", lambda: SPECS["dedup_ensemble_agreement"].fn(spark, sf_dir)
+    )
+    assert grouped and not ungrouped

@@ -20,8 +20,6 @@ run converges in 2-3 iterations."""
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -45,8 +43,8 @@ def connected_components(
     replaces the O(log diameter) join rounds, whose per-iteration fixed
     cost (2 joins + agg + checkpoint + convergence count) dominates for
     the small edge sets that near-dup thresholds typically produce. The
-    gate and the small-regime fetch are ONE job over the pairs plan
-    ALONE: ``pairs.limit(cutoff+1).collect()`` — union-find is
+    gate and the small-regime fetch are ONE bounded Arrow fetch over the
+    pairs plan ALONE (driver_union_find_gate) — union-find is
     insensitive to duplicate/asymmetric edges, so the raw pairs ARE the
     input and the small regime never runs the symmetrize-union +
     distinct shuffle at all (r12: sequential blocking jobs made
@@ -63,6 +61,12 @@ def connected_components(
     checkpointed exactly once, and the distributed min-label +
     pointer-jumping loop below runs unchanged. ``driver_edge_cutoff=0``
     forces the distributed path (used by tests to pin its semantics)."""
+    if driver_edge_cutoff > 0:
+        small = driver_union_find_gate(
+            pairs, left_col, right_col, driver_edge_cutoff, ("member", "component")
+        )
+        if small is not None:
+            return small
     edges_plan = (
         pairs.select(F.col(left_col).alias("src"), F.col(right_col).alias("dst"))
         .unionByName(
@@ -70,22 +74,6 @@ def connected_components(
         )
         .distinct()
     )
-    if driver_edge_cutoff > 0:
-        probe = (
-            pairs.select(
-                F.col(left_col).alias("src"), F.col(right_col).alias("dst")
-            )
-            .limit(driver_edge_cutoff + 1)
-            .collect()
-        )
-        if len(probe) <= driver_edge_cutoff:
-            # vtype from the POST-UNION schema: if left/right differ in
-            # width (int vs bigint) the union widens, and the driver
-            # path must declare the same type the distributed path
-            # would produce (r13 ADVICE).
-            return _driver_union_find(
-                probe, pairs.sparkSession, edges_plan.schema["src"].dataType
-            )
     edges = edges_plan.localCheckpoint()
     labels = (
         edges.select(F.col("src").alias("v"))
@@ -149,14 +137,55 @@ def connected_components(
     return labels.select(F.col("v").alias("member"), "component")
 
 
-def _driver_union_find(rows, spark, vtype) -> DataFrame:
-    """Min-root union-find over a bounded, already-collected (src, dst)
-    row list — duplicates, self-loops, and asymmetric orientation are
-    all absorbed by the union, so raw pairs need no distinct/symmetrize
-    pre-pass. Path-halving + union-by-min keeps the root of every tree
-    at the component's minimum vertex id, matching the distributed
-    loop's output exactly (same (member, component) rows, component =
-    min id)."""
+def driver_union_find_gate(
+    edges: DataFrame, a: str, b: str, cutoff: int, names: tuple[str, str]
+) -> DataFrame | None:
+    """The driver side of both size-gated CC operators (this module and
+    operators/concomp.py). ONE bounded fetch, ``limit(cutoff + 1)
+    .toArrow()`` of the raw (a, b) endpoints: more than ``cutoff`` rows
+    returns None (the caller runs its distributed loop); otherwise a
+    driver union-find labels every endpoint and the result is ONE Arrow
+    table → DataFrame with columns ``names`` = (vertex, component).
+
+    The endpoints are fetched as ``array(a, b)``, so Spark widens them to
+    their common type exactly as the distributed path's endpoint union
+    does (int and bigint endpoints label as bigint — components.py r13
+    ADVICE), and that post-union type is read off the Arrow schema:
+    no schema probe. A cutoff of 1M edges is ≈ 16 MB of longs in Arrow
+    buffers, not Python Row objects.
+
+    Why not count first and fetch only below the cutoff: below the
+    cutoff — the common case — that evaluates the pairs plan twice (a
+    count job, then the fetch). The single fetch runs one job either
+    way; above the cutoff it stops at cutoff + 1 rows."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    probe = edges.selectExpr(f"array(`{a}`, `{b}`) AS e").limit(cutoff + 1).toArrow()
+    if probe.num_rows > cutoff:
+        return None
+    atype = probe.schema.field("e").type.value_type
+    ends = pc.list_flatten(probe.column("e")).to_pylist()
+    members, comps = _driver_union_find(ends[0::2], ends[1::2])
+    vtype = from_arrow_type(atype)
+    schema = T.StructType(
+        [T.StructField(names[0], vtype, True), T.StructField(names[1], vtype, True)]
+    )
+    table = pa.table(
+        [pa.array(members, atype), pa.array(comps, atype)], names=list(names)
+    )
+    return edges.sparkSession.createDataFrame(table, schema)
+
+
+def _driver_union_find(srcs: list, dsts: list) -> tuple[list, list]:
+    """Min-root union-find over a bounded edge list — duplicates,
+    self-loops, and asymmetric orientation are all absorbed by the union,
+    so raw pairs need no distinct/symmetrize pre-pass. Path-halving +
+    union-by-min keeps the root of every tree at the component's minimum
+    vertex id, matching the distributed loops' output exactly (same
+    (vertex, component) rows, component = min id). Returns the vertex and
+    component columns."""
     parent: dict = {}
 
     def find(x):
@@ -167,8 +196,7 @@ def _driver_union_find(rows, spark, vtype) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for r in rows:  # bounded by driver_edge_cutoff at the call site
-        s, d = r["src"], r["dst"]
+    for s, d in zip(srcs, dsts):  # bounded by the gate's cutoff
         parent.setdefault(s, s)
         parent.setdefault(d, d)
         rs, rd = find(s), find(d)
@@ -176,18 +204,8 @@ def _driver_union_find(rows, spark, vtype) -> DataFrame:
             # union by min so the surviving root is the smaller id
             lo, hi = (rs, rd) if rs < rd else (rd, rs)
             parent[hi] = lo
-    out = [(v, find(v)) for v in parent]
-    schema = T.StructType(
-        [
-            T.StructField("member", vtype, True),
-            T.StructField("component", vtype, True),
-        ]
-    )
-    # Arrow path (pandas input): ships the rows as one Arrow batch in a
-    # couple of partitions — the list-of-tuples path pickles per-slice and
-    # measured ~5s for a 2-row coalesce(1) on local[32].
-    pdf = pd.DataFrame(out, columns=["member", "component"])
-    return spark.createDataFrame(pdf, schema=schema)
+    members = list(parent)
+    return members, [find(v) for v in members]
 
 
 def dedup_groups(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:

@@ -44,6 +44,13 @@ the carried stats pins the estimate at defaultSizeInBytes; AQE still
 re-plans every join from true runtime sizes, so execution strategy is
 unchanged (probed: identical results, chain rounds back to constant
 cost).
+
+Build cost: below the size gate (connected_components_gated) the build
+is one bounded ``limit(cutoff + 1).toArrow()`` fetch, a driver
+union-find, and one Arrow table handed back as a local relation
+(components.driver_union_find_gate, shared with
+components.connected_components): no Row objects, no pandas frame, no
+schema probe.
 """
 
 from __future__ import annotations
@@ -51,6 +58,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_caic_spark.operators.components import driver_union_find_gate
 from etl_caic_spark.util import strip_plan_stats
 
 MAX_ROUNDS = 64
@@ -101,8 +109,9 @@ def connected_components_gated(
     """Size-gated hybrid over ``connected_components`` (r16, the r15
     verdict's ask #7 — the operators/components.py precedent): when the
     raw edge list has at most ``driver_edge_cutoff`` rows (1M pairs ≈
-    16 MB of longs, trivially driver-resident), ONE bounded
-    ``limit(cutoff+1).collect()`` job feeds a driver union-find and the
+    16 MB of longs in Arrow buffers, trivially driver-resident), ONE
+    bounded ``limit(cutoff+1).toArrow()`` fetch feeds a driver
+    union-find (module docstring, "Build cost") and the
     star-contraction loop's per-round fixed cost (per round: a take(1)
     convergence probe, a contraction join chain, plus per-jump
     checkpoint + take(1) inside the pointer-doubling shortcut — a dozen
@@ -114,27 +123,11 @@ def connected_components_gated(
     (union-find with union-by-min; duplicate/asymmetric edges absorbed).
     ``driver_edge_cutoff=0`` forces the distributed path (tests)."""
     if driver_edge_cutoff > 0:
-        probe = (
-            edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-            .limit(driver_edge_cutoff + 1)
-            .collect()
+        small = driver_union_find_gate(
+            edges, "a", "b", driver_edge_cutoff, ("v", "component")
         )
-        if len(probe) <= driver_edge_cutoff:
-            from etl_caic_spark.operators.components import _driver_union_find
-
-            # vtype from the POST-UNION schema: if a/b differ in width
-            # the distributed path's label union would widen — the
-            # driver path must declare the same type (components.py
-            # r13 ADVICE lesson).
-            vtype = (
-                edges.select(F.col("a").alias("v"))
-                .unionByName(edges.select(F.col("b").alias("v")))
-                .schema["v"]
-                .dataType
-            )
-            return _driver_union_find(
-                probe, edges.sparkSession, vtype
-            ).select(F.col("member").alias("v"), "component")
+        if small is not None:
+            return small
     return connected_components(edges)
 
 

@@ -14,6 +14,11 @@ O(n²) full cross products):
                       never all-pairs.
 - simhash_pairs:      63-bit SimHash fingerprints + 4-block pigeonhole
                       banding for hamming-distance candidates.
+
+Build cost: the shingles, the md5 MinHash signatures, the band explode
+and the band join + verify of the md5 family are SQL text (the join and
+verify one ``spark.sql`` statement), so building a pair frame is a
+handful of py4j calls, not one per expression node.
 """
 
 from __future__ import annotations
@@ -24,18 +29,21 @@ from pyspark.sql import functions as F
 from etl_caic_spark.util import widen_narrow_scan
 
 
-def word_shingles(text_col, k: int = 3):
-    """Distinct word k-gram shingles of a text column, JVM-side only:
-    split → sliding windows via transform(sequence) → array_distinct.
-    Documents shorter than k words contribute their full text as the one
-    shingle (so they still participate)."""
-    words = F.split(text_col, " ")
-    n = F.size(words)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(n - k, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(words, i + 1, k)),
+def word_shingles_sql(text: str, k: int = 3) -> str:
+    """SQL text of the distinct word k-gram shingles of column ``text``,
+    JVM-side only: split → sliding windows via transform(sequence) →
+    array_distinct. Documents shorter than k words contribute their full
+    text as the one shingle (so they still participate)."""
+    words = f"split(`{text}`, ' ')"
+    return (
+        f"array_distinct(transform(sequence(0, greatest(size({words}) - {k}, 0)), "
+        f"i -> concat_ws(' ', slice({words}, i + 1, {k}))))"
     )
-    return F.array_distinct(grams)
+
+
+def word_shingles(text: str, k: int = 3):
+    """word_shingles_sql as a Column."""
+    return F.expr(word_shingles_sql(text, k))
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -82,7 +90,7 @@ def ngram_jaccard_pairs(
     shingled = widen_narrow_scan(df).select(
         F.col(id_col).alias("doc"),
         *[F.col(c) for c in bucket_cols],
-        F.explode(word_shingles(F.col(text_col), k)).alias("shingle"),
+        F.explode(word_shingles(text_col, k)).alias("shingle"),
     )
     if max_shingle_df is not None:
         w = Window.partitionBy(*bucket_cols, "shingle")
@@ -137,7 +145,7 @@ def minhash_signatures(
     partial min → tiny shuffle)."""
     shingled = widen_narrow_scan(df).select(
         F.col(id_col).alias("doc"),
-        F.explode(word_shingles(F.col(text_col), k)).alias("shingle"),
+        F.explode(word_shingles(text_col, k)).alias("shingle"),
     )
     mins = [
         F.min(F.xxhash64("shingle", F.lit(j))).alias(f"h{j}") for j in range(num_hashes)
@@ -231,44 +239,33 @@ def minhash_md5_signatures(
     reproducible by any engine (unlike the Spark-specific xxhash64 fast
     path). Returns (doc, sig: array<string>[num_hashes]), NOT
     checkpointed — the caller decides materialization."""
-    shingled = widen_narrow_scan(df).select(
-        F.col(id_col).alias("doc"),
-        F.explode(word_shingles(F.col(text_col), k)).alias("shingle"),
+    mins = ", ".join(
+        f"min(md5(concat_ws('|', '{j}', shingle)))" for j in range(num_hashes)
     )
-    mins = [
-        F.min(F.md5(F.concat_ws("|", F.lit(str(j)), "shingle"))).alias(f"h{j}")
-        for j in range(num_hashes)
-    ]
     return (
-        shingled.groupBy("doc")
-        .agg(*mins)
-        .select(
-            "doc",
-            F.array(*[F.col(f"h{j}") for j in range(num_hashes)]).alias("sig"),
+        widen_narrow_scan(df)
+        .selectExpr(
+            f"`{id_col}` AS doc", f"explode({word_shingles_sql(text_col, k)}) AS shingle"
         )
+        .groupBy("doc")
+        .agg(F.expr(f"array({mins}) AS sig"))
     )
 
 
-def _md5_banded(sig: DataFrame, num_hashes: int, bands: int, carry_sig: bool) -> DataFrame:
-    """Band-key explode over an md5 signature frame: band key = md5 of the
-    band's comma-joined minima. With carry_sig the signature array rides
-    along through the explode (the checkpoint-free audit shape)."""
+def _md5_band_sql(num_hashes: int, bands: int) -> str:
+    """SQL generator over a ``sig`` column: one (band_idx, band_hash) row
+    per band, band key = md5 of the band's comma-joined minima."""
     rows = num_hashes // bands
-    keep = ["doc", "sig"] if carry_sig else ["doc"]
-    return sig.select(
-        *keep,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bi: F.struct(
-                    bi.alias("band_idx"),
-                    F.md5(
-                        F.concat_ws(",", F.slice("sig", bi * rows + 1, rows))
-                    ).alias("band_hash"),
-                ),
-            )
-        ).alias("band"),
-    ).select(*keep, "band.band_idx", "band.band_hash")
+    return (
+        f"inline(transform(sequence(0, {bands - 1}), bi -> named_struct("
+        f"'band_idx', bi, 'band_hash', "
+        f"md5(concat_ws(',', slice(sig, bi * {rows} + 1, {rows}))))))"
+    )
+
+
+def _md5_banded(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(doc, band_idx, band_hash) rows of an md5 signature frame."""
+    return sig.selectExpr("doc", _md5_band_sql(num_hashes, bands))
 
 
 def minhash_md5_candidate_pairs(
@@ -312,58 +309,42 @@ def minhash_md5_candidate_pairs(
         sig = minhash_md5_signatures(df, id_col, text_col, num_hashes, k)
         if checkpoint_sig:
             sig = sig.localCheckpoint()
+    band = _md5_band_sql(num_hashes, bands)
+    on = "a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.doc < b.doc"
     if checkpoint_sig:
-        banded = _md5_banded(sig, num_hashes, bands, carry_sig=False)
-        a = banded.alias("a")
-        b = banded.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.doc") < F.col("b.doc")),
+        pairs = f"""
+            WITH banded AS (SELECT doc, {band} FROM {{sig}}),
+            cand AS (
+              SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
+              FROM banded a JOIN banded b ON {on}
             )
-            .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-            .distinct()
-        )
-        sa = sig.select(F.col("doc").alias("doc_a"), F.col("sig").alias("sig_a"))
-        sb = sig.select(F.col("doc").alias("doc_b"), F.col("sig").alias("sig_b"))
-        est = cand.join(sa, "doc_a").join(sb, "doc_b")
+            SELECT c.doc_a, c.doc_b, sa.sig AS sig_a, sb.sig AS sig_b
+            FROM cand c
+            JOIN {{sig}} sa ON sa.doc = c.doc_a
+            JOIN {{sig}} sb ON sb.doc = c.doc_b"""
     else:
-        banded = _md5_banded(sig, num_hashes, bands, carry_sig=True)
         # merge-join hint on BOTH sides: a broadcast plan would wrap one
         # side in a BroadcastExchange (not reusable against the other
         # side's shuffle) and the sig aggregate would execute twice;
         # with identical shuffle exchanges the second side is a
-        # ReusedExchange and the sig pipeline runs exactly once.
-        a = banded.hint("merge").alias("a")
-        b = banded.hint("merge").alias("b")
-        est = (
-            a.join(
-                b,
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.doc") < F.col("b.doc")),
-            )
-            .select(
-                F.col("a.doc").alias("doc_a"),
-                F.col("b.doc").alias("doc_b"),
-                F.col("a.sig").alias("sig_a"),
-                F.col("b.sig").alias("sig_b"),
-            )
-            .distinct()  # sig is functional on doc: same pairs either shape
-        )
-    est = est.withColumn(
-        "est_jaccard",
-        F.aggregate(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        )
-        / F.lit(num_hashes),
-    )
-    return est.filter(F.col("est_jaccard") >= threshold).select(
-        "doc_a", "doc_b", "est_jaccard"
+        # ReusedExchange and the sig pipeline runs exactly once. DISTINCT
+        # over the carried sigs: sig is functional on doc, so the pairs
+        # are the same either shape.
+        pairs = f"""
+            WITH banded AS (SELECT doc, sig, {band} FROM {{sig}})
+            SELECT /*+ MERGE(a, b) */ DISTINCT
+              a.doc AS doc_a, b.doc AS doc_b, a.sig AS sig_a, b.sig AS sig_b
+            FROM banded a JOIN banded b ON {on}"""
+    # estimated Jaccard = the fraction of agreeing signature positions
+    return sig.sparkSession.sql(
+        f"""
+        SELECT doc_a, doc_b, est_jaccard FROM (
+          SELECT doc_a, doc_b,
+            aggregate(zip_with(sig_a, sig_b, (x, y) -> CAST(x = y AS INT)),
+                      0, (acc, x) -> acc + x) / {num_hashes} AS est_jaccard
+          FROM ({pairs})
+        ) WHERE est_jaccard >= {float(threshold)!r}D""",
+        sig=sig,
     )
 
 

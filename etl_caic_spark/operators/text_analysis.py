@@ -285,7 +285,7 @@ def contamination_pairs(
     shingled = widen_narrow_scan(docs).select(
         F.col(id_col).alias("doc"),
         F.col(split_col).alias("split"),
-        F.explode(word_shingles(F.col(text_col), k)).alias("shingle"),
+        F.explode(word_shingles(text_col, k)).alias("shingle"),
     )
     if max_shingle_df is not None:
         w = Window.partitionBy("shingle")

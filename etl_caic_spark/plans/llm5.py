@@ -145,7 +145,7 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         widen_narrow_scan(d)
         .select(
             "doc_id",
-            F.explode(word_shingles(F.col("text"), 3)).alias("shingle"),
+            F.explode(word_shingles("text", 3)).alias("shingle"),
         )
         .distinct()
     )

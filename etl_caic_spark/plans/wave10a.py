@@ -158,6 +158,18 @@ _PQ_SQL = f"""
 """
 
 
+def _pq_width(emb: DataFrame) -> int:
+    """Partition count for the coordinate-stream checkpoint: 1 while the
+    scan's plan-time size estimate fits in one file split, otherwise the
+    cluster's defaultParallelism."""
+    spark = emb.sparkSession
+    size = emb._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    if int(size) <= split:
+        return 1
+    return spark.sparkContext.defaultParallelism
+
+
 def pq_shortlist_frames(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -179,9 +191,13 @@ def pq_shortlist_frames(
     # stage ADDED ~0.7 s of task/AQE overhead (bench 4.4 -> 5.1) with
     # no compute to amortize it. At real scale the scan arrives wide on
     # its own and widen_narrow_scan is the no-op branch either way.
-    # r16: checkpoint HASH-PARTITIONED BY vec_id (still width 1 — the
-    # r15 width sweep {1,8,32} stands: 2.77/3.45/4.43, task overhead
-    # swamps the tiny compute). localCheckpoint preserves the child's
+    # r16: checkpoint HASH-PARTITIONED BY vec_id. Width 1 while the
+    # embeddings scan fits in one file split (plan-time Catalyst size
+    # estimate of the scan vs spark.sql.files.maxPartitionBytes; no job):
+    # the r15 width sweep {1,8,32} stands there, 2.77/3.45/4.43 — task
+    # overhead swamps the tiny compute. A larger scan hashes into
+    # defaultParallelism partitions, so at scale the coordinate stream
+    # never funnels through one task. localCheckpoint preserves the child's
     # outputPartitioning in the LogicalRDD, so every downstream
     # groupBy/join keyed on vec_id (both assignment rounds, adc, the
     # exact rerank legs of sim_pq_adc AND eval_pq_recall) now satisfies
@@ -197,7 +213,7 @@ def pq_shortlist_frames(
             "d",
             F.round(F.col("xf").cast("double") * 1e6).cast("bigint").alias("x"),
         )
-        .repartition(1, "vec_id")
+        .repartition(_pq_width(emb), "vec_id")
         .localCheckpoint()
     )
     # r16: anchor ids come from the CHECKPOINTED coordinate stream (the

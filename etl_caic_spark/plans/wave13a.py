@@ -176,7 +176,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     sh = widen_narrow_scan(d).select(
         "doc_id",
-        F.explode(word_shingles(F.col("text"), _NOVELTY_N)).alias("g"),
+        F.explode(word_shingles("text", _NOVELTY_N)).alias("g"),
     )
     df = sh.groupBy("g").agg(F.count("*").cast("bigint").alias("df"))
     return (

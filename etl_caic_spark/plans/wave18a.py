@@ -114,7 +114,7 @@ def text_decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     g = widen_narrow_scan(d).select(
         "doc_id",
-        F.explode(D.word_shingles(F.col("text"), _DECON_N)).alias("ng"),
+        F.explode(D.word_shingles("text", _DECON_N)).alias("ng"),
     )
     ev = g.filter(
         (F.col("doc_id") % _DECON_MOD == 0)
@@ -315,7 +315,7 @@ def eval_lsh_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collision between UNEQUAL slices is the same 2^-128 event every
     # md5-keyed query already rides — hash-verified against the oracle
     # at sf0.01/0.1).
-    banded = D._md5_banded(sig, _SWEEP_HASHES, _SWEEP_BANDS[0], carry_sig=False)
+    banded = D._md5_banded(sig, _SWEEP_HASHES, _SWEEP_BANDS[0])
     a = banded.alias("a")
     b = banded.alias("b")
     cand = (
@@ -379,7 +379,7 @@ def eval_lsh_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         widen_narrow_scan(d)
         .select(
             F.col("doc_id").alias("doc"),
-            F.explode(D.word_shingles(F.col("text"), 3)).alias("shingle"),
+            F.explode(D.word_shingles("text", 3)).alias("shingle"),
         )
         .repartition(fanout, "shingle")
     )

@@ -367,7 +367,7 @@ def eval_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = base.select(
         "doc_id",
         "is_eval",
-        F.explode(D.word_shingles(F.col("text"), _RPT_NGRAM)).alias("ng"),
+        F.explode(D.word_shingles("text", _RPT_NGRAM)).alias("ng"),
     )
     ngram_hits = (
         g.filter(~F.col("is_eval"))
@@ -385,7 +385,7 @@ def eval_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     s0 = base.select(
         "doc_id",
         "is_eval",
-        F.explode(D.word_shingles(F.col("text"), 3)).alias("sh"),
+        F.explode(D.word_shingles("text", 3)).alias("sh"),
     )
     dfw = Window.partitionBy("sh")
     s = (

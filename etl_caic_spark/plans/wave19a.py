@@ -86,7 +86,7 @@ def gram50_dup_counts(d: DataFrame) -> DataFrame:
         "doc_id",
         F.explode(
             F.transform(
-                D.word_shingles(F.col("text"), _G50_N), lambda s: F.md5(s)
+                D.word_shingles("text", _G50_N), lambda s: F.md5(s)
             )
         ).alias("gh"),
     )

@@ -223,7 +223,7 @@ def eval_minhash_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truth leg's warm time at sf0.1)
     sh = widen_narrow_scan(d).select(
         F.col("doc_id").alias("doc"),
-        F.explode(D.word_shingles(F.col("text"), 3)).alias("shingle"),
+        F.explode(D.word_shingles("text", 3)).alias("shingle"),
     ).repartition(fanout, "shingle")
     sizes = sh.groupBy("doc").agg(F.count("*").cast("bigint").alias("sz"))
     x = sh.alias("x")

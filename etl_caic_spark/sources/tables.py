@@ -1,10 +1,15 @@
 """Parquet table catalog for the driver-generated synthetic tables.
 
-Schemas documented in FIXTURES.md Part A. Reads are plain
-``spark.read.parquet`` so Catalyst gets projection/predicate pushdown and
-partition-sized splits for free; at 100 TB the same call reads a
-multi-file dataset and ``spark.sql.files.maxPartitionBytes`` governs split
-sizing — nothing here assumes a single file.
+Schemas are declared in ``schemas.TABLE_SCHEMAS`` (FIXTURES.md Part A)
+and passed to the reader, so a load runs no schema-inference job. Each
+file's footer is checked against the declaration on the driver first
+(pyarrow, metadata only): a column the declaration does not know, or one
+whose type differs, raises instead of being read as nulls or re-typed.
+Reads are otherwise plain ``spark.read.parquet`` so Catalyst gets
+projection/predicate pushdown and partition-sized splits for free; at
+100 TB the same call reads a multi-file dataset and
+``spark.sql.files.maxPartitionBytes`` governs split sizing — nothing here
+assumes a single file.
 """
 
 from __future__ import annotations
@@ -13,6 +18,9 @@ import os
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from etl_caic_spark.schemas import TABLE_SCHEMAS
 
 TABLE_NAMES = (
     "region",
@@ -37,7 +45,61 @@ def table_path(sf_dir: str, name: str) -> str:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    return spark.read.schema(declared_schema(path, TABLE_SCHEMAS[name])).parquet(path)
+
+
+def declared_schema(path: str, declared: T.StructType) -> T.StructType:
+    """The read schema for the dataset at ``path``: its footer's columns, in
+    footer order (what inference would give), typed as ``declared`` says.
+
+    A footer column that ``declared`` lacks (a rename) or whose Spark type
+    differs from the declared one (a retype) raises TypeError: the read
+    never null-fills or casts. A file with fewer columns than declared (a
+    hand-built fixture) reads as those columns; a query that needs a
+    missing one fails at analysis. Footer-only and cached per file
+    version, like the ts sniff."""
+    p = _first_part_file(path)
+    st = os.stat(p)
+    return _declared_schema(p, st.st_mtime_ns, st.st_size, declared)
+
+
+@lru_cache(maxsize=256)
+def _declared_schema(
+    p: str, mtime_ns: int, size: int, declared: T.StructType
+) -> T.StructType:
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(p)
+    phys = {c.path: c.physical_type for c in pf.schema}
+    want = {f.name: f.dataType for f in declared.fields}
+    fields, drift = [], []
+    for f in pf.schema_arrow:
+        got = _spark_type(f.type, phys.get(f.name))
+        if want.get(f.name) != got:
+            drift.append(f"{f.name}: file {got}, declared {want.get(f.name)}")
+        fields.append(T.StructField(f.name, want.get(f.name, got), True))
+    if drift:
+        raise TypeError(
+            f"{p} does not match its declared schema "
+            f"(etl_caic_spark/schemas.py TABLE_SCHEMAS): {'; '.join(drift)}"
+        )
+    return T.StructType(fields)
+
+
+def _spark_type(at, physical: str | None) -> T.DataType:
+    """The Spark type parquet inference gives an Arrow footer type. A
+    timestamp reads as TimestampType when tz-aware or INT96, as LongType
+    when annotated nanos (only readable under nanosAsLong, see
+    _load_events), and as TIMESTAMP_NTZ otherwise."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    if pa.types.is_timestamp(at):
+        if at.tz is not None or physical == "INT96":
+            return T.TimestampType()
+        return T.LongType() if at.unit == "ns" else T.TimestampNTZType()
+    return from_arrow_type(at)
 
 
 def events_ts_physical_type(path: str):
@@ -131,15 +193,32 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = table_path(sf_dir, "events")
     kind = events_ts_physical_type(path)
+    schema = declared_schema(path, _events_schema(kind))
     if kind == "int_nanos":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+        ts = F.timestamp_micros(F.expr("ts DIV 1000"))
     else:
-        df = spark.read.parquet(path)
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        ts = F.col("ts").cast("timestamp")
+    df = spark.read.schema(schema).parquet(path).withColumn("ts", ts)
     _assert_sane_ts_range(path, kind)
     return df
+
+
+_TS_TYPES = {
+    "int_nanos": T.LongType(),
+    "timestamp_tz": T.TimestampType(),
+    "timestamp": T.TimestampNTZType(),
+}
+
+
+def _events_schema(kind: str) -> T.StructType:
+    """TABLE_SCHEMAS["events"] with ts typed as the footer sniff found it."""
+    return T.StructType(
+        [
+            T.StructField(f.name, _TS_TYPES[kind], True) if f.name == "ts" else f
+            for f in TABLE_SCHEMAS["events"].fields
+        ]
+    )
 
 
 @lru_cache(maxsize=64)

@@ -32,10 +32,12 @@ def widen_narrow_scan(df: DataFrame, per_core: int = 1) -> DataFrame:
     A scan of one small file yields one partition, which serializes a 50×
     explode onto a single core; a 100 TB scan already arrives thousands of
     partitions wide and this is a no-op (no shuffle added). The check is
-    plan-time only — no job is triggered."""
+    plan-time only — no job is triggered — and reads the partition count
+    off the JVM-side RDD of the plan (``df.rdd`` would also build a
+    Python RDD around it for nothing)."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism * per_core
-    if df.rdd.getNumPartitions() >= target:
+    if df._jdf.queryExecution().toRdd().getNumPartitions() >= target:
         return df
     return df.repartition(target)
 

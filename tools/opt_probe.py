@@ -52,8 +52,7 @@ def main() -> None:
             names.append(a)
             i += 1
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app_name="opt-probe", cpus=cpus)
+    spark = get_spark(app_name="opt-probe")
     specs = all_specs()
     missing = [n for n in names if n not in specs]
     if missing:

@@ -34,8 +34,7 @@ def noop(df):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app_name="pq-profile", cpus=cpus)
+    spark = get_spark(app_name="pq-profile")
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode(
         "overwrite"
     ).save()

@@ -39,8 +39,7 @@ def main() -> None:
         else:
             names.append(argv[i])
             i += 1
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app_name="qhash-r15", cpus=cpus)
+    spark = get_spark(app_name="qhash-r15")
     specs = all_specs()
     for name in names:
         df = specs[name].fn(spark, sf_dir)

@@ -7,7 +7,7 @@ the whole composition hash-matches):
       → exact content-hash dedup              (operators/dedup.exact_dedup)
       → near-dup group collapse               (ngram Jaccard >= 0.5,
         stop-shingle df-cap 20, connected     (operators/dedup +
-        components, keep min-id rep)           operators/components)
+        components, keep min-id rep)           operators/concomp)
       → quality gate  (score >= 0.65)         (text_analysis.quality_features)
       → repetition gate (top-word <= 0.12)    (text_analysis.repetition_signals)
 
@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_caic_spark.operators import dedup as D
-from etl_caic_spark.operators.components import dedup_groups
+from etl_caic_spark.operators.concomp import dedup_groups
 from etl_caic_spark.operators.text_analysis import quality_features
 from etl_caic_spark.registry import register
 from etl_caic_spark.sources import load_table

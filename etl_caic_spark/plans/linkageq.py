@@ -155,14 +155,14 @@ def link_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical entity id (min partkey) per cluster of fuzzy-matching
     names; singletons stay their own entity.
 
-    Reuses operators/components.connected_components — iterative
-    min-label propagation with pointer jumping at scale, size-gated to
-    driver union-find below 1M edges. The oracle mirrors the closure
+    Reuses operators/concomp.connected_components — star contraction
+    with pointer doubling at scale, size-gated to driver union-find
+    below 1M edges. The oracle mirrors the closure
     with a DuckDB recursive CTE (viable at oracle scale only). Pair
     generation stays O(N*W) via SNM, so the whole resolution is
     linear + closure rounds at 100 TB.
     """
-    from etl_caic_spark.operators.components import dedup_groups
+    from etl_caic_spark.operators.concomp import dedup_groups
 
     matches = link_sorted_neighborhood(spark, sf_dir).select(
         F.col("a_key").alias("doc_a"), F.col("b_key").alias("doc_b")

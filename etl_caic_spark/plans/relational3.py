@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_caic_spark.operators import dedup as D
-from etl_caic_spark.operators.components import dedup_groups
+from etl_caic_spark.operators.concomp import dedup_groups
 from etl_caic_spark.registry import register
 from etl_caic_spark.sources import load_table
 from etl_caic_spark.util import scratch_path
@@ -337,8 +337,8 @@ def dedup_groups_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (threshold 0.5, stop-shingle df-cap 20 — the same skew guard as
     dedup_jaccard_capped, so the pair generation is 100 TB-safe): every
     transitive cluster collapses to its min-id representative
-    (operators/components.py — iterative min-label propagation with
-    pointer-jumping and per-iteration checkpointing). Oracled via a DuckDB
+    (operators/concomp.py — driver union-find below the size gate,
+    star contraction with pointer doubling above it). Oracled via a DuckDB
     recursive-CTE transitive closure (component = min reachable id —
     viable at oracle scale; the iterative DataFrame form is the 100 TB
     path); pytest additionally verifies against a Python union-find."""

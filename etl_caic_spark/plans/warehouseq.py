@@ -436,11 +436,11 @@ def geo_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: neighbor pairs from the grid-cell equi-join
     (operators/geo.grid_neighbor_pairs — no all-pairs), degree count,
-    then connected components (operators/components.py — pointer-
-    jumping min-label at scale, recursive-CTE twin in the oracle).
+    then connected components (operators/concomp.py — star contraction
+    with pointer doubling at scale, recursive-CTE twin in the oracle).
     Linear in points x density; the eps grid bounds every join input.
     """
-    from etl_caic_spark.operators.components import connected_components
+    from etl_caic_spark.operators.concomp import connected_components
     from etl_caic_spark.operators.geo import grid_neighbor_pairs
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -463,12 +463,12 @@ def geo_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     core_b = core.select(F.col("v").alias("id_b"))
     core_edges = (
         pairs.join(core_a, "id_a").join(core_b, "id_b")
-        .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
+        .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     )
     comp = connected_components(core_edges)
     return (
         core.join(deg, "v")
-        .join(comp, core.v == comp.member, "left")
+        .join(comp, "v", "left")
         .select(
             F.col("v").alias("vec_id"),
             "n_neighbors",

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_caic_spark.operators import lsh as L
-from etl_caic_spark.operators.concomp import connected_components_gated
+from etl_caic_spark.operators.concomp import connected_components
 from etl_caic_spark.registry import register
 from etl_caic_spark.sources import load_table
 
@@ -138,7 +138,7 @@ def dedup_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = L.lsh_cosine_pairs(
         corpus, "vec_id", "embedding", threshold=0.9, planes=64, band_bits=16, dims=64
     ).select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-    comp = connected_components_gated(pairs).select(
+    comp = connected_components(pairs).select(
         F.col("v").alias("vec_id"), F.col("component").alias("canonical_vec")
     )
     sizes = comp.groupBy("canonical_vec").agg(

@@ -49,7 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_caic_spark.operators.concomp import connected_components_gated
+from etl_caic_spark.operators.concomp import connected_components
 from etl_caic_spark.registry import register
 from etl_caic_spark.sources import load_table
 
@@ -90,7 +90,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles are keyed by node/label id.
 
     r16: size-gated like every other componentization consumer
-    (concomp.connected_components_gated — one bounded probe, driver
+    (concomp.connected_components — one bounded probe, driver
     union-find below 1M raw edges, the distributed loop above; labels
     identical by construction, pinned by
     tests/test_prefix_property.py). The residue-sparsified fixture
@@ -109,6 +109,6 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    return connected_components_gated(edges).select(
+    return connected_components(edges).select(
         F.col("v").alias("user_id"), "component"
     )

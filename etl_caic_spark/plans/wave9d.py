@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_caic_spark.operators import dedup as D
-from etl_caic_spark.operators.concomp import connected_components_gated
+from etl_caic_spark.operators.concomp import connected_components
 from etl_caic_spark.registry import register
 from etl_caic_spark.sources import load_table
 
@@ -144,7 +144,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = D.minhash_lsh_pairs_md5(
         d, "doc_id", "text", num_hashes=16, bands=8, k=3, threshold=0.5
     ).select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    comp = connected_components_gated(pairs).select(
+    comp = connected_components(pairs).select(
         F.col("v").alias("doc_id"), F.col("component").alias("canonical_doc")
     )
     sizes = comp.groupBy("canonical_doc").agg(

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_caic_spark.operators import dedup as D
-from etl_caic_spark.operators.components import connected_components, dedup_groups
+from etl_caic_spark.operators.concomp import connected_components, dedup_groups
 from etl_caic_spark.sources import load_table
 
 
@@ -31,7 +31,8 @@ def test_components_match_union_find(spark, sf_dir):
     pairs = D.ngram_jaccard_pairs(
         d, "doc_id", "text", ["lang", "source"], k=3, threshold=0.5
     )
-    edge_list = [(r["doc_a"], r["doc_b"]) for r in pairs.collect()]
+    edges = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+    edge_list = [(r["a"], r["b"]) for r in edges.collect()]
     assert edge_list, "no near-dup pairs — corpus changed?"
 
     uf = UnionFind()
@@ -40,17 +41,15 @@ def test_components_match_union_find(spark, sf_dir):
     expected = {v: uf.find(v) for v in uf.parent}
 
     # default path (size-gated: small edge sets run driver union-find)
-    got = {
-        r["member"]: r["component"] for r in connected_components(pairs).collect()
-    }
+    got = {r["v"]: r["component"] for r in connected_components(edges).collect()}
     # canonical min-representative: union-find path roots ARE the min ids
     # because union() always parents the larger root under the smaller.
     assert got == expected
 
     # distributed path forced (cutoff=0): must produce identical labels
     got_dist = {
-        r["member"]: r["component"]
-        for r in connected_components(pairs, driver_edge_cutoff=0).collect()
+        r["v"]: r["component"]
+        for r in connected_components(edges, driver_edge_cutoff=0).collect()
     }
     assert got_dist == expected
 

@@ -1,7 +1,7 @@
 """Eager builders without per-expression round trips: declared table
 schemas (sources/tables.load_table), the SQL-text md5 MinHash-LSH build
-(operators/dedup.py) and the one-fetch Arrow gate shared by both
-connected-components operators (operators/components.py, concomp.py)."""
+(operators/dedup.py) and the one-fetch Arrow gate of the
+connected-components operator (operators/concomp.py)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from etl_caic_spark.operators import components as C
 from etl_caic_spark.operators import concomp
 from etl_caic_spark.operators import dedup as D
 from etl_caic_spark.registry import all_specs
@@ -136,14 +135,6 @@ def _union_find(edges):
 EDGES = [(2, 1), (3, 2), (5, 9), (9, 5), (10, 11), (11, 12), (20, 4), (4, 6)]
 
 
-def _gated(kind, df, cutoff=1_000_000):
-    if kind == "concomp":
-        return concomp.connected_components_gated(df, driver_edge_cutoff=cutoff)
-    return C.connected_components(
-        df.withColumnsRenamed({"a": "doc_a", "b": "doc_b"}), driver_edge_cutoff=cutoff
-    ).withColumnsRenamed({"member": "v"})
-
-
 def _spy(monkeypatch, df, name):
     calls = []
     orig = getattr(type(df), name)
@@ -156,15 +147,14 @@ def _spy(monkeypatch, df, name):
     return calls
 
 
-@pytest.mark.parametrize("kind", ["concomp", "components"])
-def test_gate_is_one_bounded_arrow_fetch(spark, monkeypatch, kind):
+def test_gate_is_one_bounded_arrow_fetch(spark, monkeypatch):
     """Below the cutoff the gate fetches once through Arrow (no Row
     collect), hands back a local relation, and labels with the
     post-union type: int and bigint endpoints give bigint labels."""
     df = spark.createDataFrame(EDGES, "a int, b long")
     arrow = _spy(monkeypatch, df, "toArrow")
     rows = _spy(monkeypatch, df, "collect")
-    out = _gated(kind, df)
+    out = concomp.connected_components(df)
     assert arrow == ["toArrow"] and rows == []
     assert [f.dataType.simpleString() for f in out.schema.fields] == ["bigint"] * 2
     plan = out._jdf.queryExecution().optimizedPlan().toString()
@@ -172,21 +162,19 @@ def test_gate_is_one_bounded_arrow_fetch(spark, monkeypatch, kind):
     assert {(r["v"], r["component"]) for r in out.collect()} == _union_find(EDGES)
 
 
-@pytest.mark.parametrize("kind", ["concomp", "components"])
-def test_gate_above_small_cutoff_runs_distributed(spark, monkeypatch, kind):
+def test_gate_above_small_cutoff_runs_distributed(spark, monkeypatch):
     """With a cutoff below the edge count the probe comes back over the
     cutoff and the distributed loop runs; its labels are union-find's."""
     df = spark.createDataFrame(EDGES, "a long, b long")
     ran = []
-    orig = concomp._shortcut if kind == "concomp" else C.strip_plan_stats
-    target = (concomp, "_shortcut") if kind == "concomp" else (C, "strip_plan_stats")
+    orig = concomp._shortcut
 
     def spy(*a, **kw):
         ran.append(1)
         return orig(*a, **kw)
 
-    monkeypatch.setattr(*target, spy)
-    out = _gated(kind, df, cutoff=3)
+    monkeypatch.setattr(concomp, "_shortcut", spy)
+    out = concomp.connected_components(df, driver_edge_cutoff=3)
     assert ran, "distributed loop did not run"
     assert {(r["v"], r["component"]) for r in out.collect()} == _union_find(EDGES)
 

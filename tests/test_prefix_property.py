@@ -73,15 +73,11 @@ def test_with_global_order_matches_sorted_reference(spark, vals, parts):
     )
 )
 def test_connected_components_matches_union_find(spark, edges):
-    """Star contraction must agree with a textbook union-find on any
-    graph, with the minimum node id as the representative."""
-    edges = [(min(a, b), max(a, b)) for a, b in edges if a != b]
-    if not edges:
-        return
-    df = spark.createDataFrame(sorted(set(edges)), "a bigint, b bigint")
-    got = {
-        r["v"]: r["component"] for r in connected_components(df).collect()
-    }
+    """Both paths — the driver gate and the star contraction forced by
+    ``driver_edge_cutoff=0`` — must agree with a textbook union-find on
+    any raw edge list (self-loops, duplicates, either orientation), with
+    the minimum node id as the representative."""
+    df = spark.createDataFrame(edges, "a bigint, b bigint")
 
     parent: dict[int, int] = {}
 
@@ -97,7 +93,10 @@ def test_connected_components_matches_union_find(spark, edges):
             parent[max(ra, rb)] = min(ra, rb)
     nodes = {n for e in edges for n in e}
     ref = {n: find(n) for n in nodes}
-    assert got == ref
+    for cutoff in (1_000_000, 0):
+        got = connected_components(df, driver_edge_cutoff=cutoff).collect()
+        assert {r["v"]: r["component"] for r in got} == ref
+        assert len(got) == len(ref)  # one row per endpoint
 
 
 def test_connected_components_long_path(spark):
@@ -114,7 +113,10 @@ def test_connected_components_long_path(spark):
     ids = [(i * 97) % n for i in range(n)]
     edges = [(min(a, b), max(a, b)) for a, b in zip(ids, ids[1:])]
     df = spark.createDataFrame(sorted(set(edges)), "a bigint, b bigint")
-    got = {r["v"]: r["component"] for r in connected_components(df).collect()}
+    got = {
+        r["v"]: r["component"]
+        for r in connected_components(df, driver_edge_cutoff=0).collect()
+    }
     assert got == {v: 0 for v in range(n)}
 
 
@@ -124,7 +126,10 @@ def test_connected_components_two_long_chains(spark):
     c1 = [(i, i + 1) for i in range(0, 79)]
     c2 = [(i, i + 1) for i in range(100, 179)]
     df = spark.createDataFrame(c1 + c2, "a bigint, b bigint")
-    got = {r["v"]: r["component"] for r in connected_components(df).collect()}
+    got = {
+        r["v"]: r["component"]
+        for r in connected_components(df, driver_edge_cutoff=0).collect()
+    }
     want = {v: 0 for v in range(80)}
     want.update({v: 100 for v in range(100, 180)})
     assert got == want
@@ -209,23 +214,21 @@ def test_strip_plan_stats_fallback_warns_once(spark):
         U._STRIP_STATS_UNAVAILABLE = old_flag
 
 
-def test_connected_components_gated_matches_distributed(spark):
-    """r16: the size-gated hybrid's driver path must return exactly the
-    distributed star-contraction's labels (same rows, same types) — and
-    cutoff=0 must force the distributed path."""
-    from etl_caic_spark.operators.concomp import connected_components_gated
-
+def test_connected_components_gate_matches_distributed(spark):
+    """The size gate's driver path must return exactly the distributed
+    star-contraction's labels (same rows, same types) — and cutoff=0
+    must force the distributed path."""
     edges = [(2, 1), (3, 2), (5, 9), (9, 5), (7, 7), (10, 11)]
     df = spark.createDataFrame(edges, "a long, b long")
     via_driver = {
         (r["v"], r["component"])
-        for r in connected_components_gated(df).collect()
+        for r in connected_components(df).collect()
     }
     via_dist = {
         (r["v"], r["component"])
-        for r in connected_components_gated(df, driver_edge_cutoff=0).collect()
+        for r in connected_components(df, driver_edge_cutoff=0).collect()
     }
     assert via_driver == via_dist
-    assert connected_components_gated(df).schema == connected_components_gated(
+    assert connected_components(df).schema == connected_components(
         df, driver_edge_cutoff=0
     ).schema

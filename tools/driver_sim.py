@@ -8,15 +8,15 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod  # noqa: E402
-
-import os
+from etl_caic_spark.session import default_cpus  # noqa: E402
 
 SF_CHECK = os.environ.get("DRIVER_SIM_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (
@@ -83,7 +83,7 @@ def value_hash(cols, rows):
 
 def main():
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{default_cpus()}]")
         .appName("driver-sim")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

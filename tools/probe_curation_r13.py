@@ -14,7 +14,7 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F  # noqa: E402
 
 from etl_caic_spark.operators import dedup as D  # noqa: E402
-from etl_caic_spark.operators.components import dedup_groups  # noqa: E402
+from etl_caic_spark.operators.concomp import dedup_groups  # noqa: E402
 from etl_caic_spark.operators.text_analysis import (  # noqa: E402
     quality_features,
     repetition_signals,
@@ -49,7 +49,7 @@ def corpus(spark):
 
 
 def main():
-    spark = get_spark(app_name="probe-curation", cpus=32)
+    spark = get_spark(app_name="probe-curation")
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
     c = corpus(spark)
     sink(c)  # warm the scan

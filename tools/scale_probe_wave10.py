@@ -45,7 +45,7 @@ def noop(df):
 
 def main() -> None:
     factors = [int(x) for x in sys.argv[1:]] or [1, 10, 30]
-    spark = get_spark(app_name="scale-probe-w10", cpus=32)
+    spark = get_spark(app_name="scale-probe-w10")
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode(
         "overwrite"
     ).save()
@@ -64,7 +64,7 @@ def main() -> None:
             edges = ids.select(
                 F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
             )
-            comp = connected_components(edges)
+            comp = connected_components(edges, driver_edge_cutoff=0)
             bad = comp.where(F.col("component") != 0).count()
             assert bad == 0, f"chain CC wrong labels: {bad} of {n}"
 
@@ -89,7 +89,7 @@ def main() -> None:
                 .filter(F.col("a") != F.col("b"))
                 .distinct()
             )
-            noop(connected_components(edges))
+            noop(connected_components(edges, driver_edge_cutoff=0))
 
         li = replicate(spark, "lineitem", factor, "l_orderkey", 100_000_000)
 

@@ -18,7 +18,7 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql.window import Window as W  # noqa: E402
 
-from etl_caic_spark.operators.components import connected_components  # noqa: E402
+from etl_caic_spark.operators.concomp import connected_components  # noqa: E402
 from etl_caic_spark.operators.geo import grid_neighbor_pairs  # noqa: E402
 from etl_caic_spark.operators.snm import sorted_neighborhood_pairs  # noqa: E402
 from etl_caic_spark.session import get_spark  # noqa: E402
@@ -28,7 +28,7 @@ from tools.scale_probe import SF_DIR, replicate, timeit  # noqa: E402
 
 def main() -> None:
     factors = [int(x) for x in sys.argv[1:]] or [1, 10, 30]
-    spark = get_spark(app_name="scale-probe-w7", cpus=32)
+    spark = get_spark(app_name="scale-probe-w7")
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode(
         "overwrite"
     ).save()
@@ -106,11 +106,11 @@ def main() -> None:
             edges = (
                 pairs.join(core.select(F.col("v").alias("id_a")), "id_a")
                 .join(core.select(F.col("v").alias("id_b")), "id_b")
-                .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
+                .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
             )
-            return core.join(
-                connected_components(edges), core.v == F.col("member"), "left"
-            ).select("v", F.coalesce("component", F.col("v")).alias("c"))
+            return core.join(connected_components(edges), "v", "left").select(
+                "v", F.coalesce("component", F.col("v")).alias("c")
+            )
 
         def qnorm():
             s = ev.filter(F.col("event_id") % 4 == 0).select(

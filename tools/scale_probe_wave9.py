@@ -42,7 +42,7 @@ def noop(df):
 
 def main() -> None:
     factors = [int(x) for x in sys.argv[1:]] or [1, 10, 30]
-    spark = get_spark(app_name="scale-probe-w9", cpus=32)
+    spark = get_spark(app_name="scale-probe-w9")
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode(
         "overwrite"
     ).save()
@@ -126,7 +126,7 @@ def main() -> None:
                 .filter(F.col("a") != F.col("b"))
                 .distinct()
             )
-            noop(connected_components(edges))
+            noop(connected_components(edges, driver_edge_cutoff=0))
 
         # -- PQ core: quantize, assign to 16 broadcast anchors, Lloyd
         # step, re-assign (the corpus-scale stages of sim_pq_adc)

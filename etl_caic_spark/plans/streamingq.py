@@ -372,76 +372,6 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out)
 
 
-def _tws_protobuf_viable() -> bool:
-    """transformWithState's state server speaks protobuf to the Python
-    worker; without a working google.protobuf the query crashes at stream
-    start. Probe once at import so the query registers exactly where it
-    can run (standard PySpark 4 installs) and stays off the surface where
-    it cannot.
-
-    Status in THIS container (probed round 5): `import google` raises
-    ModuleNotFoundError — no protobuf distribution, wheel, or vendorable
-    copy exists anywhere on the filesystem, and installs are prohibited.
-    Vendoring is not a fix: google.protobuf's pure-Python fallback is a
-    ~30k-line package and PySpark's generated *_pb2.py additionally wants
-    the C-accelerated upb runtime. So the operator (streaming/stateful.py
-    RunningTotalsProcessor) ships complete with a skip-guarded test, and
-    this query registers only where the probe passes. Registry count is
-    therefore N (+1 where protobuf is viable) — see COVERAGE.md."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
-if _tws_protobuf_viable():
-
-    @register(
-        "stream_transform_with_state",
-        oracle="""
-        SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-               round(sum(value), 2) AS total
-        FROM events GROUP BY 1
-        """,
-        tags=("streaming", "stateful", "udf"),
-    )
-    def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """transformWithStateInPandas running per-user totals (the Spark 4
-        successor to applyInPandasWithState): named ValueState per key,
-        integer-cents accumulation so replay order cannot perturb the sum.
-        Same final-state-vs-batch-groupBy oracle as stream_stateful_totals.
-
-        Scale: RocksDB state store, two BIGINTs per key — O(distinct
-        keys), independent of stream length."""
-        from pyspark.sql import functions as SF
-
-        from etl_caic_spark.streaming.stateful import running_user_totals_tws
-
-        key = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(
-            key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        try:
-            ev = SW.read_events_stream(spark, sf_dir).select("user_id", "value")
-            out = SW.run_stream_to_table(
-                spark, running_user_totals_tws(ev), "update"
-            )
-            return out.groupBy("user_id").agg(
-                SF.max("n").cast("bigint").alias("n"),
-                SF.round(SF.max_by("total", "n"), 2).alias("total"),
-            )
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-
-
 @register(
     "stream_outer_join",
     oracle="""

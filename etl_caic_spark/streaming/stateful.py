@@ -40,59 +40,3 @@ def running_user_totals(events: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-TWS_OUTPUT_SCHEMA = "user_id bigint, n bigint, total double"
-
-
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-
-class RunningTotalsProcessor(StatefulProcessor):
-    """transformWithState StatefulProcessor (Spark 4) — the successor API
-    to applyInPandasWithState above: named state variables on a handle
-    (here one ValueState) instead of a single opaque state tuple, plus
-    timers and TTL the legacy API lacks. The running sum is kept in
-    integer CENTS so replay order cannot perturb it; dollars are
-    reconstructed only on emit. State per key: two BIGINTs — O(distinct
-    keys), independent of stream length, same as the legacy operator."""
-
-    def init(self, handle):
-        self._totals = handle.getValueState("totals", "n bigint, cents bigint")
-
-    def handleInputRows(self, key, rows, timer_values):
-        got = self._totals.get()
-        n, cents = got if got is not None else (0, 0)
-        for pdf in rows:
-            n += len(pdf)
-            cents += int(
-                (pdf["value"] * 100).round().astype("int64").sum()
-            )
-        self._totals.update((n, cents))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n": [n], "total": [cents / 100.0]}
-        )
-
-    def close(self):
-        pass
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """transformWithStateInPandas running totals — mirrors
-    running_user_totals through the new API (requires the RocksDB state
-    store provider, set by the caller).
-
-    NOT registered as a driver query: Spark's transformWithState state
-    server speaks protobuf to the Python worker, and this container's
-    google.protobuf is unusable (ImportError: cannot import name
-    'descriptor'), so the operator crashes at stream start here. The
-    implementation is kept (and covered by a skip-guarded test,
-    tests/test_stateful_streaming.py) because it runs on a standard
-    PySpark 4 install; applyInPandasWithState (running_user_totals) is
-    the registered, driver-verified stateful path."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotalsProcessor(),
-        outputStructType=TWS_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

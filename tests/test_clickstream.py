@@ -10,6 +10,7 @@ import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from etl_caic_spark.oracle import create_views, mismatch
 from etl_caic_spark.registry import all_specs
 
 T0 = datetime(2026, 2, 1, 10, 0, 0, 200000)  # .2 s past the second
@@ -49,15 +50,10 @@ def test_half_second_over_the_gap_splits_the_session(spark, tmp_path):
     )
     spec = all_specs()["clickstream_pipeline"]
     df = spec.fn(spark, str(tmp_path))
-    got = sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
-    rel = con.sql(spec.oracle)
-    want = sorted(
-        tuple(r) for r in rel.select(*sorted(rel.columns)).fetchall()
-    )
+    rows = df.collect()
+    con = create_views(duckdb.connect(), tmp_path, ["events"])
+    assert mismatch(con, spec.oracle, df, rows) is None
     con.close()
-    assert got == want
-    sessions = {r[0]: r for r in df.collect()}
+    sessions = {r[0]: r for r in rows}
     assert sessions["view"]["n_sessions"] == 2  # user 1's first, user 2's
     assert sessions["click"]["n_sessions"] == 1  # user 1's second

@@ -77,41 +77,3 @@ def test_caic_pipeline_streaming_matches_batch(spark):
     }
     assert streamed_features == batch_features
     assert len(batch_features) > 0
-
-
-def test_transform_with_state_totals_if_supported(spark):
-    """transformWithStateInPandas twin of the applyInPandasWithState
-    totals — skipped where the container's protobuf cannot back Spark's
-    transformWithState state server."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("google.protobuf unusable: transformWithState needs it")
-    from etl_caic_spark.streaming import windows as SW
-    from etl_caic_spark.streaming.stateful import running_user_totals_tws
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        ev = SW.read_events_stream(spark, "/root/testdata/sf0.001").select(
-            "user_id", "value"
-        )
-        out = SW.run_stream_to_table(spark, running_user_totals_tws(ev), "update")
-        batch = (
-            spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-            .groupBy("user_id")
-            .count()
-        )
-        assert out.select("user_id").distinct().count() == batch.count()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)

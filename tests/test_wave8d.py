@@ -91,19 +91,20 @@ def test_chrf_keeps_order_missing_from_every_reference(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from etl_caic_spark.oracle import create_views, mismatch
+
     pq.write_table(
         pa.table({"doc_id": pa.array([0, 1, 2, 3], pa.int64()),
                   "text": ["ab", "abc", "xy", "xyz"]}),
         tmp_path / "documents.parquet",
     )
     spec = SPECS["eval_chrf_corpus"]
-    got = spec.fn(spark, str(tmp_path)).collect()[0].asDict()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
-    rel = con.sql(spec.oracle)
-    want = dict(zip(rel.columns, rel.fetchone()))
+    df = spec.fn(spark, str(tmp_path))
+    rows = df.collect()
+    con = create_views(duckdb.connect(), tmp_path, ["documents"])
+    assert mismatch(con, spec.oracle, df, rows) is None
     con.close()
-    assert got == want
+    got = rows[0].asDict()
     assert got["hyp3"] == 2 and got["match3"] == 0
     assert got["ref3"] is None and got["chrf2_3_micro"] is None
     assert (got["match2"], got["hyp2"], got["ref2"]) == (2, 4, 2)

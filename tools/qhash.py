@@ -1,9 +1,9 @@
 """Order-insensitive output hash of named queries — the equivalence gate
-for optimization refactors (round 15).
+for optimization refactors.
 
-Computes exactly driver_sim's canonical value hash (column-sorted,
-row-sorted, canon() cell encoding) of each named query's Spark output at
-the given SF dir. Run BEFORE and AFTER a refactor; identical hashes at
+Computes etl_caic_spark.oracle.value_hash (column-sorted, row-sorted,
+canon() cell encoding) of each named query's Spark output at the given
+SF dir. Run BEFORE and AFTER a refactor; identical hashes at
 sf0.01 AND sf0.1 prove the rewrite is result-identical on data 10x
 beyond what the driver checks.
 
@@ -17,14 +17,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from etl_caic_spark.oracle import value_hash  # noqa: E402
 from etl_caic_spark.registry import all_specs  # noqa: E402
 from etl_caic_spark.session import get_spark  # noqa: E402
-
-# The whole point of this tool is to compute EXACTLY driver_sim's hash;
-# import its canonicalization instead of copy-pasting it (r15 ADVICE:
-# a future edit to driver_sim's canon() would silently desynchronize
-# the equivalence gate).
-from tools.driver_sim import canon, value_hash  # noqa: E402, F401
 
 
 def main() -> None:
@@ -39,7 +34,7 @@ def main() -> None:
         else:
             names.append(argv[i])
             i += 1
-    spark = get_spark(app_name="qhash-r15")
+    spark = get_spark(app_name="qhash")
     specs = all_specs()
     for name in names:
         df = specs[name].fn(spark, sf_dir)

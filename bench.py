@@ -1,32 +1,40 @@
 """Benchmark runner: times every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 SHORT JSON line {"metric", "value", "unit", "queries", "sf", ...} as the
-final stdout line. "queries" holds only the slowest 10 (the full ~125-query
-map made the line several KB and the round driver captures a bounded output
-tail — round 1's BENCH parsed as null); the complete per-query map is
-written to BENCH_FULL.json next to this script. Unset, SPARK_GRAFT_CPUS
-defaults to the host's cores (session.default_cpus).
+final stdout line. "queries" holds only the slowest 10 (the full per-query
+map would make the line several KB, and a bounded output-tail capture must
+hold it intact); the complete per-query map is written to BENCH_FULL.json
+next to this script. Unset, SPARK_GRAFT_CPUS defaults to the host's cores
+(session.default_cpus).
 
 Each query is forced end-to-end with the noop sink (df.write.format("noop"))
 so projection/aggregation work is not optimized away by a count().
 
-Steal sentinel (r13 verdict ask #2): this sandbox suffers bursty external
-CPU steal that inflated whole segments of the r13 bench 1.4x with no code
-change. A fixed ~0.3 s control query is timed before the sweep (min-of-3 =
-control_base) and again after every _SENTINEL_EVERY queries; when a control
-reading exceeds _SENTINEL_FACTOR x control_base, every query in that
-segment is marked steal-suspect and re-timed once at the end. BENCH_FULL
-gains a machine-readable "steal_adjusted" block — control base/readings,
-contaminated segments, per-query adjusted (min over all measurements)
-timings, and the adjusted total — so cross-round comparison no longer
-depends on prose re-timing tables in SCALE.md. The headline JSON line
-carries both the raw and the adjusted totals."""
+Raw axis: "value" and BENCH_FULL's "queries" are each query's first
+reading, except that a stall outlier (> max(5 s, 3x the median)) keeps the
+min of its two readings.
+
+Steal sentinel: this host suffers bursty external CPU steal that can
+inflate whole segments of a sweep with no code change. A fixed ~0.3 s
+control query is timed before the sweep (min-of-3 = control_base) and again
+after every _SENTINEL_EVERY queries; a reading above _SENTINEL_FACTOR x
+control_base marks that segment's queries steal-suspect.
+
+One retime pass (pick_retimes) follows the sweep: the stall outliers, the
+steal-suspect queries and the slowest _TAIL_K are each re-timed once, and
+the adjusted reading is the min of the two. BENCH_FULL's "steal_adjusted"
+block holds the control base/readings, the inflated segments, every
+retime pair, the per-query adjusted timings and the adjusted total; the
+headline JSON line carries both the raw and the adjusted totals. No
+earlier archive is read, so a run's numbers depend only on the run."""
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import re
+import statistics
 import sys
 import time
 
@@ -43,90 +51,40 @@ def run_once(spark, spec, sf_dir: str) -> float:
 
 _SENTINEL_EVERY = 10  # control reading after every N timed queries
 _SENTINEL_FACTOR = 2.0  # reading > factor x base => segment contaminated
-_REGRESS_FACTOR = 1.5  # retime if > factor x prior-round archive value
-_REGRESS_FLOOR = 0.5  # ...and above this absolute floor (sec)
-_REGRESS_CAP = 60  # at most this many regression retimes per run
+_STALL_FLOOR = 5.0  # stall outlier: first reading > max(floor, ...
+_STALL_FACTOR = 3.0  # ... factor x the median first reading)
 _TAIL_K = 12  # slowest-K unconditional retimes
 
 
-def _load_prior_archive(repo_dir: str, cpus: int | None = None) -> dict:
-    """The newest BENCH_FULL_r{N}[_c{cores}].json archive; with ``cpus``,
-    the newest whose recorded ``cpus`` matches it (an archive that records
-    none never matches), so a run is only ever compared like-for-like.
-    Unreadable archives are skipped; empty dict when nothing matches."""
-    archives = sorted(
-        (int(m.group(1)), f)
-        for f in os.listdir(repo_dir)
-        if (m := re.match(r"BENCH_FULL_r(\d+)(?:_c\d+)?\.json$", f))
-    )
-    for _, f in reversed(archives):
-        try:
-            with open(os.path.join(repo_dir, f)) as fh:
-                data = json.load(fh)
-        except Exception:  # pragma: no cover - archive is best-effort
-            continue
-        if cpus is None or data.get("cpus") == cpus:
-            return data
-    return {}
+def stall_outliers(timings: dict[str, float]) -> set[str]:
+    """Queries whose first reading exceeds max(5 s, 3x the median) — the
+    one-off host stalls whose raw reading keeps the min of two."""
+    ok = [t for t in timings.values() if t >= 0]
+    if not ok:
+        return set()
+    cutoff = max(_STALL_FLOOR, _STALL_FACTOR * statistics.median(ok))
+    return {n for n, t in timings.items() if t > cutoff}
 
 
-def load_prior_adjusted(repo_dir: str, cpus: int | None = None) -> dict[str, float]:
-    """Per-query baseline from the newest matching archive (see
-    _load_prior_archive) — its steal_adjusted axis when present, raw
-    queries otherwise. Empty dict when no archive matches."""
-    pdata = _load_prior_archive(repo_dir, cpus)
-    if not pdata:
-        return {}
-    return pdata.get("steal_adjusted", {}).get("queries") or pdata.get(
-        "queries", {}
-    )
-
-
-def load_prior_control_base(repo_dir: str, cpus: int | None = None) -> float | None:
-    """The newest matching archive's control base. A run whose own min-of-3
-    control readings are steal-inflated would otherwise raise the
-    sentinel threshold and blind itself (observed: base 0.96 s on a
-    stolen box vs 0.25-0.38 s quiet) — flooring against the best KNOWN
-    uncontended cost keeps the trigger honest."""
-    pdata = _load_prior_archive(repo_dir, cpus)
-    base = pdata.get("steal_adjusted", {}).get("control_base_sec")
-    return float(base) if isinstance(base, (int, float)) and base > 0 else None
-
-
-def pick_regressed(
-    adjusted: dict[str, float],
-    prior: dict[str, float],
-    already: set[str],
-    factor: float = _REGRESS_FACTOR,
-    floor: float = _REGRESS_FLOOR,
-    cap: int = _REGRESS_CAP,
-) -> list[str]:
-    """Queries whose reading exceeds factor x their prior-archive value
-    (and the absolute floor), worst inflation first, capped — the
-    cross-round regression retime set."""
-    ranked = sorted(
-        (
-            (adjusted[n] / prior[n], n)
-            for n in adjusted
-            if n in prior
-            and prior[n] > 0
-            and adjusted[n] > max(floor, factor * prior[n])
-            and n not in already
-        ),
-        reverse=True,
-    )[:cap]
-    return [n for _, n in ranked]
-
-
-def pick_tail(adjusted: dict[str, float], k: int = _TAIL_K) -> list[str]:
+def pick_tail(timings: dict[str, float], k: int = _TAIL_K) -> list[str]:
     """The slowest k queries (they dominate the total and are the most
-    steal-exposed) — the unconditional retime set."""
+    steal-exposed), slowest first — retimed unconditionally."""
     return [
         n
         for _, n in sorted(
-            ((t, n) for n, t in adjusted.items() if t >= 0), reverse=True
+            ((t, n) for n, t in timings.items() if t >= 0), reverse=True
         )[:k]
     ]
+
+
+def pick_retimes(
+    timings: dict[str, float], suspect: set[str], k: int = _TAIL_K
+) -> list[str]:
+    """The one retime set, each query once: the stall outliers, the
+    queries of control-inflated segments (``suspect``) and the slowest k
+    first readings. Failed (-1) queries are never retimed."""
+    picked = stall_outliers(timings) | set(suspect) | set(pick_tail(timings, k))
+    return sorted(n for n in picked if timings.get(n, -1.0) >= 0)
 
 
 def run_control(spark, sf_dir: str) -> float:
@@ -267,27 +225,15 @@ def main() -> None:
     except Exception as exc:  # pragma: no cover - warmup must not kill bench
         print(f"bench: warmup skipped: {exc}", file=sys.stderr)
 
-    import gc
-    import statistics
-
     # Steal-sentinel baseline: min-of-3 control readings on the warmed
-    # session, floored against the prior archive's base (steal only ever
-    # inflates, so the best KNOWN reading is the uncontended cost; a
-    # base measured on a stolen box would otherwise blind the sentinel).
-    measured_base = round(
-        min(run_control(spark, sf_dir) for _ in range(3)), 4
-    )
-    prior_base = load_prior_control_base(
-        os.path.dirname(os.path.abspath(__file__)), cpus
-    )
-    control_base = (
-        min(measured_base, prior_base) if prior_base else measured_base
-    )
+    # session.
+    control_base = round(min(run_control(spark, sf_dir) for _ in range(3)), 4)
     control_reads: list[dict] = []
 
     timings: dict[str, float] = {}
     segment: list[str] = []
     suspect: set[str] = set()
+    last = max(specs)  # the tail segment gets its own control reading
     for name in sorted(specs):
         try:
             timings[name] = round(run_once(spark, specs[name], sf_dir), 4)
@@ -296,102 +242,38 @@ def main() -> None:
             timings[name] = -1.0
         # Between queries (untimed): drop Python-side DataFrame refs so the
         # ContextCleaner can evict localCheckpoint/cache blocks from earlier
-        # queries — otherwise storage memory ratchets up across 167 queries
-        # and later ones pay the GC bill.
+        # queries — otherwise storage memory ratchets up across the sweep
+        # and later queries pay the GC bill.
         gc.collect()
         segment.append(name)
-        if len(segment) >= _SENTINEL_EVERY:
+        if len(segment) >= _SENTINEL_EVERY or name == last:
             c = round(run_control(spark, sf_dir), 4)
             inflated = c > _SENTINEL_FACTOR * control_base
-            control_reads.append(
-                {"after": name, "sec": c, "inflated": inflated}
-            )
+            control_reads.append({"after": name, "sec": c, "inflated": inflated})
             if inflated:
                 suspect.update(segment)
             segment = []
-    if segment:  # tail segment gets its own reading
-        c = round(run_control(spark, sf_dir), 4)
-        inflated = c > _SENTINEL_FACTOR * control_base
-        control_reads.append({"after": segment[-1], "sec": c, "inflated": inflated})
-        if inflated:
-            suspect.update(segment)
 
-    # Host-stall mitigation: on this shared sandbox a random query per run
-    # absorbs a multi-second scheduler stall (the same query measures <3s
-    # in isolation; across runs the spike lands on DIFFERENT queries, e.g.
-    # dedup_keep_best 27.8s in one run, sim_lsh_cosine 15.7s in the next,
-    # both ~2.7s isolated). Re-time only stall-suspect outliers (> 3x the
-    # median and > 5s) once and keep the MIN — first-run results for every
-    # other query are reported untouched, and both measurements land in
-    # BENCH_FULL.json for audit.
-    ok = [t for t in timings.values() if t >= 0]
-    retries: dict[str, list[float]] = {}
-    if ok:
-        cutoff = max(5.0, 3 * statistics.median(ok))
-        for name, t in sorted(timings.items()):
-            if t > cutoff:
-                try:
-                    t2 = round(run_once(spark, specs[name], sf_dir), 4)
-                except Exception:  # pragma: no cover
-                    continue
-                retries[name] = [t, t2]
-                timings[name] = min(t, t2)
-                gc.collect()
-    # Steal-adjusted pass: every query whose segment's control reading
-    # inflated is re-timed ONCE (unless the stall-retry above already
-    # re-timed it); the adjusted axis is the per-query min over all
-    # measurements. First-run values stay untouched in "queries" — both
-    # axes land in BENCH_FULL for audit.
-    steal_retimes: dict[str, list[float]] = {}
+    # One retime pass (pick_retimes): each picked query runs once more and
+    # its adjusted reading is the min of the two. The raw axis ("queries",
+    # "value") stays the first reading, except that a stall outlier keeps
+    # the min (a random query per run absorbs a multi-second host stall),
+    # so it stays comparable with the recorded history. Every pair of
+    # readings lands in BENCH_FULL for audit.
+    stalls = stall_outliers(timings)
+    retimes: dict[str, list[float]] = {}
     adjusted: dict[str, float] = dict(timings)
-    for name in sorted(suspect):
-        if timings.get(name, -1.0) < 0:
-            continue
-        if name in retries:
-            continue  # already has a second measurement
+    for name in pick_retimes(timings, suspect):
         try:
             t2 = round(run_once(spark, specs[name], sf_dir), 4)
         except Exception:  # pragma: no cover
             continue
-        steal_retimes[name] = [timings[name], t2]
+        retimes[name] = [timings[name], t2]
         adjusted[name] = min(timings[name], t2)
         gc.collect()
-    # Cross-round regression pass: ambient steal below the 2x control
-    # trigger still inflates dozens of queries by 0.1-0.5 s each (the
-    # r14 shared-462 residual vs r12). Any query reading > 1.5x its own
-    # PREVIOUS-round archive value (and > 0.5 s absolute) gets one
-    # retime, worst inflation first, capped at 60 — so the adjusted
-    # axis converges to warm-min behavior exactly where cross-round
-    # comparison needs it. All measurements land in steal_adjusted for
-    # audit.
-    prior = load_prior_adjusted(os.path.dirname(os.path.abspath(__file__)), cpus)
-    regress = pick_regressed(
-        {n: t for n, t in adjusted.items() if t >= 0},
-        prior,
-        set(steal_retimes) | set(retries),
-    )
-    for name in regress:
-        try:
-            t2 = round(run_once(spark, specs[name], sf_dir), 4)
-        except Exception:  # pragma: no cover
-            continue
-        steal_retimes[name] = [adjusted[name], t2]
-        adjusted[name] = min(adjusted[name], t2)
-        gc.collect()
-    # Tail pass: the slowest dozen queries dominate the total and are
-    # the most steal-exposed (a 30% inflation on a 4 s query costs more
-    # than on forty 0.3 s ones). Retime each once unconditionally
-    # (bounded: ~12 x slowest ~ under a minute) so the adjusted tail
-    # converges to warm-min behavior every run.
-    for name in pick_tail(adjusted):
-        try:
-            t2 = round(run_once(spark, specs[name], sf_dir), 4)
-        except Exception:  # pragma: no cover
-            continue
-        prev = steal_retimes.get(name, [adjusted[name]])
-        steal_retimes[name] = prev + [t2]
-        adjusted[name] = min(adjusted[name], t2)
-        gc.collect()
+    retries = {n: r for n, r in retimes.items() if n in stalls}
+    for name in retries:
+        timings[name] = adjusted[name]
     adjusted_total = round(sum(t for t in adjusted.values() if t >= 0), 4)
     total = round(sum(t for t in timings.values() if t >= 0), 4)
     failed = sorted(n for n, t in timings.items() if t < 0)
@@ -413,12 +295,12 @@ def main() -> None:
         "stall_retries": retries,
         "steal_adjusted": {
             "control_base_sec": control_base,
-            "control_base_measured_sec": measured_base,
+            "control_base_measured_sec": control_base,
             "control_reads": control_reads,
             "n_inflated_segments": sum(
                 1 for r in control_reads if r["inflated"]
             ),
-            "retimes": steal_retimes,
+            "retimes": retimes,
             "queries": adjusted,
             "total_sec": adjusted_total,
         },

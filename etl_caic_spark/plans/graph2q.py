@@ -73,8 +73,8 @@ def _build_und(spark: SparkSession, sf_dir: str):
 
 
 def build_truncated_adjacency(ev: DataFrame):
-    """Mutual-kNN truncated adjacency from an events DataFrame — also
-    driven directly by tools/scale_probe.py against replicated inputs."""
+    """Mutual-kNN truncated adjacency from an events DataFrame — the
+    shared build of graph_jaccard_links and graph_clustering_coeff."""
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     seq = ev.select(
         F.lag("user_id").over(w).alias("src"), F.col("user_id").alias("dst")

@@ -109,9 +109,10 @@ def stat_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     B adapts to ~sqrt(n) (power of two, floor 16; one bounded single-row
     count fixes it before planning — B only changes the plan, never the
     answer, since the oracle is the O(n^2) declarative definition with
-    no blocks at all). tools/scale_probe_wave9.py measures why: at 30x
-    fixture scale the same-block join runs 32.9 s with B=16 frozen but
-    5.6 s at B=64 and 2.4 s at B=256 — the n^2/B term is THE knob."""
+    no blocks at all). The wave-9 scale probe (SCALE.md) measured why: at
+    30x fixture scale the same-block join ran 32.9 s with B=16 frozen but
+    5.6 s at B=64 and 2.4 s at B=256 — the n^2/B term is THE knob.
+    `tools/scale_probe.py stat_kendall_tau` times the adaptive form."""
     orders = load_table(spark, sf_dir, "orders")
     rev = orders.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))

@@ -236,7 +236,8 @@ def test_readme_counts_match_registry():
     from etl_caic_spark.registry import all_specs
 
     specs = all_specs()
-    text = open("/root/repo/README.md").read()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    text = open(os.path.join(root, "README.md")).read()
     m = re.search(r"(\d+) registered queries", text)
     assert m, "README must state the registered-query count"
     assert int(m.group(1)) == len(specs), (

@@ -21,9 +21,10 @@ Exit 1 on any mismatch.
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 

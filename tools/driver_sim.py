@@ -35,6 +35,7 @@ def main():
         SparkSession.builder.master(f"local[{default_cpus()}]")
         .appName("driver-sim")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

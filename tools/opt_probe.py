@@ -18,12 +18,13 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from etl_caic_spark.registry import all_specs  # noqa: E402
 from etl_caic_spark.session import get_spark  # noqa: E402
 
-PLANS_DIR = os.environ.get("OPT_PROBE_PLANS_DIR", "/root/repo/plans/r16")
+PLANS_DIR = os.environ.get("OPT_PROBE_PLANS_DIR", os.path.join(REPO, "plans", "r16"))
 
 
 def main() -> None:

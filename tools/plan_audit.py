@@ -12,9 +12,11 @@ Usage: python tools/plan_audit.py [query ...]   (default: headline set)
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from etl_caic_spark.session import get_spark  # noqa: E402
 
@@ -135,7 +137,7 @@ def main() -> None:
     # Append when auditing an explicit subset (PLANS.md accumulates per
     # wave); a full default run rewrites the artifact from scratch.
     mode = "a" if sys.argv[1:] else "w"
-    with open("/root/repo/PLANS.md", mode) as fh:
+    with open(os.path.join(REPO, "PLANS.md"), mode) as fh:
         if mode == "a":
             fh.write("\n")
             # Slice off exactly the header so the FIRST requested query's

@@ -1,518 +1,173 @@
-"""Scale-headroom probe: replicate the sf0.1 tables 10x and 30x into
-.tmp (with shifted keys so cardinalities grow too), then time
-representative operators at each scale. Near-linear growth = the plan
-survives scale-up; superlinear growth = a quadratic hiding somewhere.
+"""Scale probe over the query registry: replicate the base sf directory
+factor-x with shifted keys into a complete scaled sf directory, time each
+selected query's build (``spec.fn``) and exec (the noop write) at every
+factor, and report each layer's log-log growth exponent. An exponent near
+1 means the plan survives scale-up; near 2, a quadratic is hiding.
 
-Usage: python tools/scale_probe.py [factors...]  (default 1 10 30)
-Writes one JSON line per run to stdout."""
+Usage: python tools/scale_probe.py NAME... [--factors 1,10,30]
+
+Each NAME is a registered query or a registry tag (``scale`` selects every
+query tagged for scale). The base is $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1); cores come from session.default_cpus(). Prints one
+JSON line per (query, factor) with build_s / exec_s / load1, then one per
+query with the exponents; exits 1 if any run failed."""
 
 from __future__ import annotations
 
 import json
+import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from pyspark.sql import Window as W  # noqa: E402
-
-from etl_caic_spark.operators.asof import asof_join  # noqa: E402
-from etl_caic_spark.operators.dedup import minhash_lsh_pairs  # noqa: E402
-from etl_caic_spark.operators.geo import grid_neighbor_pairs  # noqa: E402
-from etl_caic_spark.operators.lsh import lsh_cosine_pairs  # noqa: E402
-from etl_caic_spark.operators.pagerank import pagerank  # noqa: E402
-from etl_caic_spark.plans.graph2q import build_truncated_adjacency  # noqa: E402
-from etl_caic_spark.operators.text_analysis import repetition_signals  # noqa: E402
-from etl_caic_spark.operators.timeseries import rollup_hierarchy  # noqa: E402
-from etl_caic_spark.session import get_spark  # noqa: E402
+from etl_caic_spark.registry import all_specs  # noqa: E402
+from etl_caic_spark.session import default_cpus, get_spark  # noqa: E402
 from etl_caic_spark.sources import load_table  # noqa: E402
-from etl_caic_spark.streaming.windows import sliding_agg  # noqa: E402
 from etl_caic_spark.util import scratch_path  # noqa: E402
 
-SF_DIR = "/root/testdata/sf0.1"
+# Fact tables: key column and per-replica shift (far above the sf0.1 key
+# maxima 14,999 / 149,999 / 149,999 / 99,999 / 4,999 / 1,999, so replica
+# keys never collide). lineitem and orders shift their order key alike, so
+# replica r of lineitem joins replica r of orders; the other foreign keys
+# (custkey, partkey, suppkey, user_id) keep pointing at the shared base.
+FACTS = {
+    "customer": ("c_custkey", 100_000_000),
+    "orders": ("o_orderkey", 100_000_000),
+    "lineitem": ("l_orderkey", 100_000_000),
+    "events": ("event_id", 10_000_000),
+    "documents": ("doc_id", 10_000_000),
+    "embeddings": ("vec_id", 10_000_000),
+}
+DIMS = ("region", "nation", "supplier", "part")  # symlinked, shared
+_ALPHA = "abcdefghijklmnopqrstuvwxyz0123456789"
 
 
-def replicate(spark, name, factor, id_col, shift):
-    """Replicate a table factor x with shifted keys. For documents the text
-    is also perturbed per replica (prefix token) so replicas are DISTINCT
-    documents — replicating identical texts would measure the exact-dup hot
-    bucket pathology instead of corpus growth (exact dedup runs before
-    near-dup in the real pipeline order, SCALE.md)."""
-    base = load_table(spark, SF_DIR, name)
-    if factor == 1:
-        return base
-    path = scratch_path(f"scale_{name}_x{factor}")
-    copies = base.withColumn("_rep", F.explode(F.sequence(F.lit(0), F.lit(factor - 1))))
-    out = copies.withColumn(
-        id_col,
-        F.col(id_col) + F.col("_rep").cast("bigint") * F.lit(shift).cast("bigint"),
+def replicate(spark, base_dir: str, name: str, factor: int):
+    """``name`` replicated factor-x with its key shifted per replica.
+    Documents rotate their alphabet per replica and embeddings rotate
+    their coordinates, so every replica row is distinct: replicas of a
+    document share ~no shingles and a rotated vector lands in other LSH
+    buckets, so near-dup and bucket volume grow with the corpus instead
+    of measuring the identical-copy hot-bucket pathology."""
+    key, shift = FACTS[name]
+    rep = F.col("_rep")
+    out = (
+        load_table(spark, base_dir, name)
+        .withColumn("_rep", F.explode(F.sequence(F.lit(0), F.lit(factor - 1))))
+        .withColumn(key, F.col(key) + rep.cast("bigint") * F.lit(shift))
     )
     if name == "documents":
-        # Rotate the alphabet per replica: intra-replica near-dup structure
-        # is preserved (same substitution applied to every doc), replicas of
-        # the same doc share ~no shingles → dup-rate stays constant as the
-        # corpus grows (linear, not quadratic, true-pair growth).
-        alpha = "abcdefghijklmnopqrstuvwxyz0123456789"
-        expr = F.col("text")
+        text = F.col("text")
         for r in range(1, factor):
-            rot = alpha[r % len(alpha):] + alpha[: r % len(alpha)]
-            expr = F.when(
-                F.col("_rep") == r, F.translate("text", alpha, rot)
-            ).otherwise(expr)
-        out = out.withColumn("text", expr)
-    out = out.drop("_rep")
-    out.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+            k = r % len(_ALPHA)
+            rot = _ALPHA[k:] + _ALPHA[:k]
+            text = F.when(rep == r, F.translate("text", _ALPHA, rot)).otherwise(text)
+        out = out.withColumn("text", text)
+    if name == "embeddings":
+        out = out.withColumn(
+            "embedding",
+            F.expr(
+                "transform(embedding, (x, i) -> element_at(embedding,"
+                " CAST((i + _rep) % size(embedding) AS INT) + 1))"
+            ),
+        )
+    return out.drop("_rep")
 
 
-def timeit(fn):
+def build_scaled_dir(spark, base_dir: str, factor: int) -> str:
+    """A complete sf directory at factor x the base: the six fact tables
+    replicated, the four dimension tables symlinked."""
+    out_dir = scratch_path(f"scale_sf_x{factor}")
+    os.makedirs(out_dir, exist_ok=True)
+    for name in FACTS:
+        dst = os.path.join(out_dir, f"{name}.parquet")
+        replicate(spark, base_dir, name, factor).write.mode("overwrite").parquet(dst)
+    for name in DIMS:
+        dst = os.path.join(out_dir, f"{name}.parquet")
+        if not os.path.lexists(dst):
+            os.symlink(os.path.abspath(os.path.join(base_dir, f"{name}.parquet")), dst)
+    return out_dir
+
+
+def slope(factors: list[int], times: list[float]) -> float | None:
+    """Least-squares slope of log(time) on log(factor): the growth
+    exponent. Times are floored at 1 ms (a plan-only build reads ~0)."""
+    if len(set(factors)) < 2:
+        return None
+    xs = [math.log(f) for f in factors]
+    ys = [math.log(max(t, 1e-3)) for t in times]
+    mx, my = sum(xs) / len(xs), sum(ys) / len(ys)
+    sxx = sum((x - mx) ** 2 for x in xs)
+    return round(sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / sxx, 3)
+
+
+def select(specs: dict, names: list[str]) -> list[str]:
+    """Registered names pass through; a tag expands to its queries."""
+    picked: set[str] = set()
+    for n in names:
+        hits = {n} if n in specs else {q for q, s in specs.items() if n in s.tags}
+        if not hits:
+            sys.exit(f"scale_probe: {n!r} is neither a query nor a tag")
+        picked |= hits
+    return sorted(picked)
+
+
+def run(spark, spec, sf_dir: str) -> tuple[float, float]:
     t0 = time.perf_counter()
-    fn()
-    return round(time.perf_counter() - t0, 2)
+    df = spec.fn(spark, sf_dir)
+    t1 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    return round(t1 - t0, 4), round(time.perf_counter() - t1, 4)
 
 
-def main():
-    factors = [int(x) for x in sys.argv[1:]] or [1, 10, 30]
-    spark = get_spark(app_name="scale-probe", cpus=32)
-    spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
-
-    for factor in factors:
-        ev = replicate(spark, "events", factor, "event_id", 10_000_000)
-        docs = replicate(spark, "documents", factor, "doc_id", 10_000_000)
-        li = replicate(spark, "lineitem", factor, "l_orderkey", 100_000_000)
-        # Embeddings replicate with a cyclic coordinate shift per replica:
-        # a permuted vector projects onto different hyperplanes, so LSH
-        # bucket occupancy grows linearly (identical replicas would all
-        # collide and measure the hot-bucket pathology instead).
-        emb = load_table(spark, SF_DIR, "embeddings")
-        if factor > 1:
-            emb = (
-                emb.withColumn(
-                    "_rep", F.explode(F.sequence(F.lit(0), F.lit(factor - 1)))
-                )
-                .withColumn(
-                    "vec_id",
-                    F.col("vec_id") + F.col("_rep").cast("bigint") * 10_000_000,
-                )
-                .withColumn(
-                    "embedding",
-                    F.concat(
-                        F.slice(
-                            "embedding", F.pmod(F.col("_rep"), F.lit(64)) + 1,
-                            F.lit(64),
-                        ),
-                        F.slice(
-                            "embedding", F.lit(1), F.pmod(F.col("_rep"), F.lit(64))
-                        ),
-                    ),
-                )
-                .drop("_rep")
-                .localCheckpoint()
-            )
-
-        def noop(df):
-            df.write.format("noop").mode("overwrite").save()
-
-        timings = {
-            "rows_events": ev.count(),
-            "rows_docs": docs.count(),
-            "rows_lineitem": li.count(),
-            "q1_agg": timeit(
-                lambda: noop(
-                    li.groupBy("l_returnflag", "l_linestatus").agg(
-                        F.sum("l_quantity"), F.count("*")
-                    )
-                )
-            ),
-            "window_sliding": timeit(lambda: noop(sliding_agg(ev))),
-            "asof_join": timeit(
-                lambda: noop(
-                    asof_join(
-                        ev.filter(F.col("event_type") == "purchase").select(
-                            "event_id", "user_id", "ts", "value"
-                        ),
-                        ev.filter(F.col("event_type") == "click")
-                        .groupBy("user_id", "ts")
-                        .agg(F.max("event_id").alias("click_id")),
-                        on=["user_id"],
-                        left_ts="ts",
-                        right_ts="ts",
-                        right_values=["click_id"],
-                    )
-                )
-            ),
-            "minhash_lsh": timeit(
-                lambda: noop(
-                    minhash_lsh_pairs(docs, "doc_id", "text", num_hashes=32, bands=16)
-                )
-            ),
-            "topk_per_user": timeit(
-                lambda: noop(
-                    ev.groupBy("user_id").agg(
-                        F.max_by("event_id", "value").alias("best")
-                    )
-                )
-            ),
-            "rollup_hier": timeit(
-                lambda: noop(rollup_hierarchy(ev, "ts", ("event_type",), "value"))
-            ),
-            "repetition": timeit(
-                lambda: noop(
-                    repetition_signals(docs, "doc_id", "text", include_bigrams=False)
-                )
-            ),
-            # Default (scale) config: 64 planes / 16-bit bands. The 4-bit
-            # correctness-anchor config measured quadratic here (205 s at
-            # 30x) — see operators/lsh.py for the collision math.
-            "lsh_cosine": timeit(
-                lambda: noop(
-                    lsh_cosine_pairs(emb, "vec_id", "embedding", threshold=0.9)
-                )
-            ),
-            # r5: bitmap exact-distinct on a key space that GROWS with the
-            # factor (event_id, shifted per replica) — the bucket count
-            # scales with |keys|/64 and both groupBys stay partial-agg.
-            "bitmap_distinct": timeit(
-                lambda: noop(
-                    ev.groupBy(
-                        "event_type", F.shiftright("event_id", 6).alias("bucket")
-                    )
-                    .agg(
-                        F.bit_or(
-                            F.expr("shiftleft(1L, CAST(event_id % 64 AS INT))")
-                        ).alias("bm")
-                    )
-                    .groupBy("event_type")
-                    .agg(F.sum(F.bit_count("bm")).alias("n"))
-                )
-            ),
-            # r5: grid spatial join. Each replica is offset into its own
-            # unit box (vec_id div 10M = replica id) so point DENSITY stays
-            # constant as the corpus grows — near-pair counts, and thus the
-            # verify stage, grow linearly; without the offset the probe
-            # would measure quadratic true-pair growth in the data itself.
-            "grid_join": timeit(
-                lambda: noop(
-                    grid_neighbor_pairs(
-                        emb.select(
-                            "vec_id",
-                            (
-                                F.element_at("embedding", 1).cast("double")
-                                + (F.col("vec_id") / 10_000_000).cast("bigint")
-                            ).alias("x"),
-                            F.element_at("embedding", 2).cast("double").alias("y"),
-                        ),
-                        "vec_id",
-                        "x",
-                        "y",
-                        eps=0.03,
-                    )
-                )
-            ),
-            # r5: CDC apply — fixed key count (150 users), per-key log depth
-            # grows with the factor; one shuffle + linear per-key window scan.
-            "cdc_apply": timeit(
-                lambda: noop(
-                    ev.withColumn(
-                        "rn",
-                        F.row_number().over(
-                            W.partitionBy("user_id").orderBy(
-                                F.desc("ts"), F.desc("event_id")
-                            )
-                        ),
-                    )
-                    .filter("rn = 1 AND event_type <> 'error'")
-                    .select("user_id", "value")
-                )
-            ),
-            # r5 TPC-H completion wave — the three riskiest new patterns,
-            # inlined against the replicated fact so the probe measures
-            # the plan shape, not the fixture size:
-            # Q21: aggregate-then-window (one shuffle each, never a
-            # lineitem self-join);
-            "q21_grouped_window": timeit(
-                lambda: noop(
-                    li.groupBy("l_orderkey", "l_suppkey")
-                    .agg(F.max("l_shipdate").alias("sup_last"))
-                    .withColumn(
-                        "ord_last",
-                        F.max("sup_last").over(W.partitionBy("l_orderkey")),
-                    )
-                    .withColumn(
-                        "n_supp", F.count("*").over(W.partitionBy("l_orderkey"))
-                    )
-                    .filter(
-                        (F.col("n_supp") >= 2)
-                        & (F.col("sup_last") == F.col("ord_last"))
-                    )
-                    .groupBy("l_suppkey")
-                    .agg(F.count("*").alias("numwait"))
-                )
-            ),
-            # Q17: decorrelated per-part average joined back to the fact
-            # (both sides share partkey partitioning);
-            "q17_avg_joinback": timeit(
-                lambda: noop(
-                    li.join(
-                        li.groupBy(F.col("l_partkey").alias("pk")).agg(
-                            F.avg("l_quantity").alias("avg_qty")
-                        ),
-                        F.col("pk") == F.col("l_partkey"),
-                    )
-                    .filter(F.col("l_quantity") < 0.2 * F.col("avg_qty"))
-                    .agg(F.sum("l_extendedprice"), F.count("*"))
-                )
-            ),
-            # Q2: argmin join-back (groupBy-min + equality re-join).
-            "q2_argmin_joinback": timeit(
-                lambda: noop(
-                    li.join(
-                        li.groupBy(F.col("l_partkey").alias("pk")).agg(
-                            F.min("l_extendedprice").alias("best")
-                        ),
-                        (F.col("pk") == F.col("l_partkey"))
-                        & (F.col("l_extendedprice") == F.col("best")),
-                    ).select("l_partkey", "l_suppkey", "best")
-                )
-            ),
-            # r5 wave 15/17: span-frequency dedup (non-overlapping spans →
-            # |tokens|/2 shuffle) and the clickstream flagship's
-            # sessionize+funnel core (user window + sid aggregates).
-            # (split once into an array column, exactly like the
-            # registered query — inlining split() into the transform
-            # re-tokenizes per span and measures that waste instead)
-            "span_dedup": timeit(
-                lambda: noop(
-                    docs.select("doc_id", F.split("text", " ").alias("l"))
-                    .select(
-                        "doc_id",
-                        F.explode(
-                            F.expr(
-                                "transform(sequence(0, size(l) DIV 2 - 1),"
-                                " j -> concat(l[2*j], ' ', l[2*j+1]))"
-                            )
-                        ).alias("span"),
-                    )
-                    .groupBy("span")
-                    .agg(F.count("*").alias("cf"))
-                )
-            ),
-            "clickstream_core": timeit(
-                lambda: noop(
-                    ev.select(
-                        "user_id",
-                        "ts",
-                        "event_id",
-                        "event_type",
-                        F.when(
-                            F.lag("ts")
-                            .over(
-                                W.partitionBy("user_id").orderBy("ts", "event_id")
-                            )
-                            .isNull()
-                            | (
-                                F.unix_timestamp("ts")
-                                - F.unix_timestamp(
-                                    F.lag("ts").over(
-                                        W.partitionBy("user_id").orderBy(
-                                            "ts", "event_id"
-                                        )
-                                    )
-                                )
-                                > 1800
-                            ),
-                            1,
-                        )
-                        .otherwise(0)
-                        .alias("is_new"),
-                    )
-                    .withColumn(
-                        "sid",
-                        F.col("user_id") * 1000000
-                        + F.sum("is_new").over(
-                            W.partitionBy("user_id")
-                            .orderBy("ts", "event_id")
-                            .rowsBetween(W.unboundedPreceding, W.currentRow)
-                        ),
-                    )
-                    .groupBy("sid")
-                    .agg(
-                        F.count("*").alias("n"),
-                        F.min(
-                            F.when(F.col("event_type") == "view", F.col("ts"))
-                        ).alias("first_view"),
-                    )
-                )
-            ),
-            # r5 wave 23: the shared-neighbor wedge join over MUTUAL-kNN
-            # truncated adjacency (K=32). Nodes are the fixed user set, so
-            # as events replicate the raw graph DENSIFIES (degrees grow
-            # ~linearly with factor) — precisely the regime where an
-            # uncapped wedge join would go quadratic; the truncation bounds
-            # the join input at n*K and the wedge output at n*K^2, so the
-            # wedge stage should stay near-FLAT while the adjacency build
-            # (distinct + rank window) grows with the event count.
-            "wedge_links_trunc": timeit(
-                lambda: noop(
-                    (lambda nbr: nbr.join(
-                        nbr.select(F.col("v").alias("v2"), F.col("w")), "w"
-                    )
-                    .where(F.col("v") < F.col("v2"))
-                    .groupBy("v", "v2")
-                    .agg(F.count("*").alias("common")))(
-                        build_truncated_adjacency(ev)[0]
-                    )
-                )
-            ),
-            # r5 session 2: containment dedup — candidate pairs from the
-            # shingle equi-join only; the alphabet rotation keeps replicas
-            # shingle-disjoint, so candidate volume grows with the corpus,
-            # not its square.
-            "containment_dedup": timeit(
-                lambda: noop(
-                    (
-                        lambda sh: (
-                            lambda sizes: sh.select(
-                                F.col("doc_id").alias("a_id"), "shingle"
-                            )
-                            .join(
-                                sh.select(F.col("doc_id").alias("b_id"), "shingle"),
-                                "shingle",
-                            )
-                            .filter(F.col("a_id") < F.col("b_id"))
-                            .groupBy("a_id", "b_id")
-                            .agg(F.count("*").alias("n_inter"))
-                            .join(
-                                sizes.select(
-                                    F.col("doc_id").alias("a_id"),
-                                    F.col("n_sh").alias("n_a"),
-                                ),
-                                "a_id",
-                            )
-                            .join(
-                                sizes.select(
-                                    F.col("doc_id").alias("b_id"),
-                                    F.col("n_sh").alias("n_b"),
-                                ),
-                                "b_id",
-                            )
-                            .filter(
-                                F.col("n_inter") * 10
-                                >= F.least("n_a", "n_b") * 8
-                            )
-                        )(
-                            sh.groupBy("doc_id").agg(
-                                F.count("*").alias("n_sh")
-                            )
-                        )
-                    )(
-                        # Stop-shingle df cap (<=100) matches the registered
-                        # dedup_containment; the r5s2 SCALE.md row measured
-                        # the uncapped form (upper bound).
-                        docs.select("doc_id", F.split("text", " ").alias("ws"))
-                        .filter(F.size("ws") >= 3)
-                        .select(
-                            "doc_id",
-                            F.explode(
-                                F.expr(
-                                    "transform(sequence(0, size(ws) - 3),"
-                                    " i -> concat_ws(' ', ws[i], ws[i+1],"
-                                    " ws[i+2]))"
-                                )
-                            ).alias("shingle"),
-                        )
-                        .distinct()
-                        .withColumn(
-                            "df",
-                            F.count("*").over(W.partitionBy("shingle")),
-                        )
-                        .filter(F.col("df") <= 100)
-                        .drop("df")
-                    )
-                )
-            ),
-            # r5 session 2: basket pair join — pairs bounded by per-order
-            # basket size k (constant as orders replicate), so O(orders*k^2)
-            # must grow linearly with the factor.
-            "basket_pairs": timeit(
-                lambda: noop(
-                    (
-                        lambda items: items.select(
-                            "okey", F.col("item").alias("ante")
-                        )
-                        .join(
-                            items.select("okey", F.col("item").alias("cons")),
-                            "okey",
-                        )
-                        .filter(F.col("ante") < F.col("cons"))
-                        .groupBy("ante", "cons")
-                        .agg(F.count("*").alias("supp_ab"))
-                    )(
-                        li.join(
-                            F.broadcast(load_table(spark, SF_DIR, "part")),
-                            F.col("l_partkey") == F.col("p_partkey"),
-                        )
-                        .select(
-                            F.col("l_orderkey").alias("okey"),
-                            F.col("p_brand").alias("item"),
-                        )
-                        .distinct()
-                    )
-                )
-            ),
-            # r5 session 2: NB training grid — explode+groupBy is linear in
-            # tokens; the class x vocab grid stays bounded (vocab saturates
-            # at the 36 rotation variants of the base alphabet).
-            "nb_train_grid": timeit(
-                lambda: noop(
-                    (
-                        lambda train: (
-                            lambda counts, tots, terms: tots.crossJoin(
-                                F.broadcast(terms)
-                            )
-                            .join(counts, ["lang", "term"], "left")
-                            .select(
-                                "lang",
-                                "term",
-                                F.coalesce("cnt", F.lit(0)).alias("cnt"),
-                            )
-                        )(
-                            train.groupBy("lang", "term").agg(
-                                F.count("*").alias("cnt")
-                            ),
-                            train.groupBy("lang").agg(
-                                F.count("*").alias("tot")
-                            ),
-                            train.select("term").distinct(),
-                        )
-                    )(
-                        docs.select(
-                            "lang",
-                            F.explode(F.split("text", " ")).alias("term"),
-                        )
-                    )
-                )
-            ),
-            "pagerank": timeit(
-                lambda: noop(
-                    pagerank(
-                        ev.select(
-                            F.col("user_id").alias("src"),
-                            F.pmod(F.col("event_id"), F.lit(1000) * factor).alias(
-                                "dst"
-                            ),
-                        )
-                        .filter(F.col("src") != F.col("dst"))
-                        .distinct(),
-                        iterations=3,
-                    )
-                )
-            ),
-        }
-        print(json.dumps({"factor": factor, **timings}), flush=True)
+def main() -> None:
+    argv = sys.argv[1:]
+    factors = [1, 10, 30]
+    if "--factors" in argv:
+        i = argv.index("--factors")
+        factors = [int(f) for f in argv[i + 1].split(",")]
+        argv = argv[:i] + argv[i + 2 :]
+    if not argv:
+        sys.exit(__doc__)
+    base_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    specs = all_specs()
+    queries = select(specs, argv)
+    spark = get_spark(app_name="scale-probe", cpus=default_cpus())
+    failed: set[str] = set()
+    for q in queries:  # untimed first run: a cold query reads slower at x1
+        try:
+            run(spark, specs[q], base_dir)
+        except Exception as exc:
+            print(f"scale_probe: {q} failed at base: {exc}", file=sys.stderr)
+            failed.add(q)
+    rows: dict[str, list[tuple[int, float, float]]] = {q: [] for q in queries}
+    for f in factors:
+        sf_dir = base_dir if f == 1 else build_scaled_dir(spark, base_dir, f)
+        for q in queries:
+            if q in failed:
+                continue
+            try:
+                build_s, exec_s = run(spark, specs[q], sf_dir)
+            except Exception as exc:
+                print(f"scale_probe: {q} failed at x{f}: {exc}", file=sys.stderr)
+                failed.add(q)
+                continue
+            rows[q].append((f, build_s, exec_s))
+            row = {"query": q, "factor": f, "build_s": build_s, "exec_s": exec_s}
+            load1 = round(os.getloadavg()[0], 2)
+            print(json.dumps({**row, "load1": load1}), flush=True)
+    for q in sorted(set(queries) - failed):
+        fs, build, exec_ = zip(*rows[q])
+        total = [b + e for b, e in zip(build, exec_)]
+        exps = {"build_exp": slope(fs, build), "exec_exp": slope(fs, exec_)}
+        print(json.dumps({"query": q, **exps, "total_exp": slope(fs, total)}))
+    print(json.dumps({"n_queries": len(queries), "failed": sorted(failed)}))
     spark.stop()
+    sys.exit(1 if failed else 0)
 
 
 if __name__ == "__main__":

@@ -20,10 +20,11 @@ Usage: python tools/sortagg_census.py [name-substring ...]
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_caic_spark.plans import REGISTRY  # noqa: E402
 from etl_caic_spark.session import get_spark  # noqa: E402
